@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 
 from olake_spark.plans.ffd import Bin, first_fit_decreasing
 from olake_spark.plans.lineage import LineageManifest
+from olake_spark.session import local_df
 from olake_spark.table.format import DataFileEntry
 from olake_spark.table.stats import file_entry
 from olake_spark.table.table import CommitConflict, Table
@@ -309,7 +310,7 @@ def _rewrite_bins(table: Table, bins: list[Bin], entry_by_path: dict[str, DataFi
         for b in bins
         for p, _ in b.items
     ]
-    plan_df = table.spark.createDataFrame(rows, f"__file string, {FANOUT_COL} int")
+    plan_df = local_df(table.spark, rows, f"__file string, {FANOUT_COL} int")
     binned = df.join(F.broadcast(plan_df), "__file", "inner").drop("__file")
     key = table.meta.identifier_fields[0] if table.meta.identifier_fields else None
     # per-file roll budget from observed bytes/row (W4): a bin whose

@@ -49,6 +49,7 @@ import pandas as pd
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from olake_spark.session import local_df
 from olake_spark.table.fsio import fs_for
 from olake_spark.table.table import Table
 
@@ -214,7 +215,7 @@ def remove_orphan_files(
             .distinct()
         )
     else:
-        live_df = spark.createDataFrame([], "rel_path string")
+        live_df = local_df(spark, [], "rel_path string")
 
     # ---- physical listing of data/: driver sees only the first level
     from pyarrow import fs as pafs
@@ -226,21 +227,21 @@ def remove_orphan_files(
     # files sitting directly under data/ (not in a commit dir) are
     # foreign debris; include them via a zero-depth listing entry each
     loose = [
-        {"rel_path": i.path[len(base):], "size": int(i.size or 0),
-         "mtime_ms": int(i.mtime.timestamp() * 1000) if i.mtime else 0}
+        (i.path[len(base):], int(i.size or 0),
+         int(i.mtime.timestamp() * 1000) if i.mtime else 0)
         for i in top
         if i.type == pafs.FileType.File
     ]
     if prefixes:
         listing = (
-            spark.createDataFrame([(p,) for p in prefixes], "prefix string")
+            local_df(spark, [(p,) for p in prefixes], "prefix string")
             .repartition(min(len(prefixes), 64))
             .mapInPandas(_list_prefixes(location, root), _LISTING_SCHEMA)
         )
     else:
-        listing = spark.createDataFrame([], _LISTING_SCHEMA)
+        listing = local_df(spark, [], _LISTING_SCHEMA)
     if loose:
-        listing = listing.unionByName(spark.createDataFrame(pd.DataFrame(loose), _LISTING_SCHEMA))
+        listing = listing.unionByName(local_df(spark, loose, _LISTING_SCHEMA))
 
     orphans = (
         orphan_candidates(listing, live_df)

@@ -66,6 +66,7 @@ from olake_spark.operators.clustering import (
     cluster,
 )
 from olake_spark.plans.lineage import LineageManifest
+from olake_spark.session import local_df
 from olake_spark.table.table import Table
 
 
@@ -214,7 +215,8 @@ def cluster_incremental(
             .select(key_udf(*[c if not isinstance(c, str) else F.col(c) for c in key_cols]).alias("__k"))
         )
         if sorted_e:
-            bdf = table.spark.createDataFrame(
+            bdf = local_df(
+                table.spark,
                 [(e.path, *_key_bounds(e)) for e in sorted_e],
                 "path string, lo long, hi long",
             )

@@ -40,6 +40,7 @@ from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
 from olake_spark.plans.lineage import LineageManifest
+from olake_spark.session import local_df
 from olake_spark.table import bloom as bloom_mod
 from olake_spark.table.table import CommitConflict, Table
 
@@ -177,9 +178,7 @@ def affected_file_paths(table: Table, source_keys: DataFrame, key: str) -> list[
     if rows:
         key_field = next((f for f in table.schema.fields if f.name == key), None)
         key_type = key_field.dataType if key_field is not None else T.StringType()
-        bounds = table.spark.createDataFrame(
-            rows, "path string, lo string, hi string"
-        ).select(
+        bounds = local_df(table.spark, rows, "path string, lo string, hi string").select(
             "path",
             F.col("lo").cast(key_type).alias("lo"),
             F.col("hi").cast(key_type).alias("hi"),
@@ -612,7 +611,7 @@ def _fold_deletes_once(
         plan_rows = [
             (table.abs_entry_path(e), i) for i, e in enumerate(aff_entries)
         ]
-        plan_df = table.spark.createDataFrame(plan_rows, "__file string, __rid int")
+        plan_df = local_df(table.spark, plan_rows, "__file string, __rid int")
         # LEFT join + loud failure on an unmatched row: if the scan's
         # file_col and abs_entry_path() normalizations ever disagree
         # (URI scheme, relative location), an inner join would drop

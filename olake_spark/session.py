@@ -9,7 +9,8 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 
 def get_spark(
@@ -74,3 +75,27 @@ def get_spark(
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_df(spark: SparkSession, rows, schema: str | T.StructType) -> DataFrame:
+    """A driver-built plan table (file→sequence maps, rewrite plans,
+    bounds) as a ``LocalRelation``.
+
+    ``createDataFrame(list_of_tuples)`` yields a Python-RDD scan whose
+    size estimate is ``Long.MaxValue``, so Catalyst never broadcasts
+    anything joined to it, and broadcasting it runs a job through a
+    Python worker. An Arrow table instead becomes a ``LocalRelation``
+    with exact stats, broadcast straight from the driver. Column types
+    follow ``schema`` exactly (an ``int`` column stays ``int``).
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    cols = list(zip(*rows)) if rows else [[] for _ in schema.fields]
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema)], schema=arrow_schema
+    )
+    return spark.createDataFrame(table, schema)

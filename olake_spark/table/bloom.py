@@ -158,11 +158,22 @@ def serialize(col: str, m: int, k: int, n: int, bits: np.ndarray) -> bytes:
 
 
 def deserialize(payload: bytes) -> tuple[dict, np.ndarray] | None:
+    """(header, bits), or None for anything that is not a whole
+    sidecar — including a MAGIC-prefixed payload with a truncated or
+    garbled header (debris of a crash mid-``write_sidecar``), so every
+    caller falls back to its conservative path instead of raising."""
     if not payload.startswith(MAGIC):
         return None
-    nl = payload.index(b"\n", len(MAGIC))
-    header = json.loads(payload[len(MAGIC) : nl].decode("utf-8"))
-    bits = np.frombuffer(payload[nl + 1 :], dtype=np.uint8)
+    try:
+        nl = payload.index(b"\n", len(MAGIC))
+        header = json.loads(payload[len(MAGIC) : nl].decode("utf-8"))
+        bits = np.frombuffer(payload[nl + 1 :], dtype=np.uint8)
+    except ValueError:  # no header newline, bad UTF-8 or bad JSON
+        return None
+    if not isinstance(header, dict) or not all(
+        isinstance(header.get(f), int) for f in ("m", "k", "n")
+    ):
+        return None
     if bits.size != header["m"] // 8:
         return None
     return header, bits
@@ -312,7 +323,10 @@ def probe_files(
             return [p for p in paths if B.file_might_contain(p, col, bh1, bh2)]
 
         n = min(len(abs_paths), sc.defaultParallelism * 4)
-        hits = set(sc.parallelize(abs_paths, n).mapPartitions(part).collect())
+        try:
+            hits = set(sc.parallelize(abs_paths, n).mapPartitions(part).collect())
+        finally:
+            bc.destroy()
     else:
         from concurrent.futures import ThreadPoolExecutor
 

@@ -27,6 +27,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from olake_spark.session import local_df
 from olake_spark.table import format as fmt
 from olake_spark.table import stats as stats_mod
 from olake_spark.table.format import DataFileEntry, Snapshot, TableMetadata
@@ -205,7 +206,7 @@ class Table:
         data = [e for e in entries if e.content != fmt.CONTENT_DELETES]
         paths = [os.path.join(self.location, e.path) for e in data]
         if not paths:
-            df = self.spark.createDataFrame([], self.schema)
+            df = local_df(self.spark, [], self.schema)
             if file_col is not None:
                 df = df.withColumn(file_col, F.lit(None).cast("string"))
             return df
@@ -232,15 +233,20 @@ class Table:
         the FULL path (see ``_fpath_col``): basenames collide across
         fanout-written partition directories.
         The anti-join itself is an equi-join on the equality key with
-        the strict sequence comparison as a residual condition: shuffled
-        on the key, never a nested loop; delete files are tiny relative
-        to data, so Catalyst broadcasts that side at runtime (AQE).
+        the strict sequence comparison as a residual condition, never a
+        nested loop. Both path→sequence maps must be ``local_df``
+        LocalRelations: their exact size estimate is what lets the
+        planner see the delete side is small and broadcast it
+        (``BroadcastHashJoin LeftAnti``, no shuffle of the data scan).
+        A Python-RDD map would estimate ``Long.MaxValue`` bytes and
+        force a sort-merge anti-join with two shuffles; a delete side
+        above ``autoBroadcastJoinThreshold`` still falls back to that.
         """
         key_cols = self.meta.identifier_fields or ["_olake_id"]
         fpath = _fpath_col()
 
         seq_rows = [(self.abs_entry_path(e), e.added_snapshot_id) for e in data]
-        seq_df = self.spark.createDataFrame(seq_rows, "__fpath string, __seq long")
+        seq_df = local_df(self.spark, seq_rows, "__fpath string, __seq long")
         df = (
             df.withColumn("__fpath", fpath)
             .join(F.broadcast(seq_df), "__fpath", "left")
@@ -249,7 +255,7 @@ class Table:
 
         del_paths = [os.path.join(self.location, e.path) for e in dels]
         dseq_rows = [(self.abs_entry_path(e), e.added_snapshot_id) for e in dels]
-        dseq_df = self.spark.createDataFrame(dseq_rows, "__fpath string, __dseq long")
+        dseq_df = local_df(self.spark, dseq_rows, "__fpath string, __dseq long")
         key_schema = T.StructType([f for f in self.schema.fields if f.name in key_cols])
         del_df = (
             self.spark.read.schema(key_schema)
@@ -351,7 +357,8 @@ class Table:
         cur = self.meta.snapshot()
         if cur is None:
             # empty table: empty changelog with the contract schema
-            return self.spark.createDataFrame(
+            return local_df(
+                self.spark,
                 [],
                 T.StructType(
                     self.schema.fields
@@ -406,7 +413,7 @@ class Table:
         def _tag(entries: list[DataFileEntry], read_schema: T.StructType) -> DataFrame:
             paths = [os.path.join(self.location, e.path) for e in entries]
             snap_rows = [(self.abs_entry_path(e), e.added_snapshot_id) for e in entries]
-            snap_df = self.spark.createDataFrame(snap_rows, "__fpath string, __snap long")
+            snap_df = local_df(self.spark, snap_rows, "__fpath string, __snap long")
             return (
                 self.spark.read.schema(read_schema)
                 .parquet(*paths)
@@ -440,7 +447,7 @@ class Table:
                 )
             )
         if not parts:
-            return self.spark.createDataFrame([], out_schema)
+            return local_df(self.spark, [], out_schema)
         out = parts[0]
         for p in parts[1:]:
             out = out.unionAll(p)

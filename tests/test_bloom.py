@@ -102,6 +102,20 @@ class TestBloomCore:
         B.write_sidecar(wrong, B.build("other_col", ["x"], 0.01))
         assert B.file_might_contain(wrong, "_olake_id", h1, h2)
 
+    def test_torn_header_is_conservative(self, tmp_path, built):
+        """A crash mid-write_sidecar leaves MAGIC plus a partial
+        header: every reader must treat the file as affected, never
+        raise."""
+        payload, _, _ = built
+        torn = B.MAGIC + b'{"col": '
+        for debris in (torn, B.MAGIC + b'{"col": "_olake_id"}\n', B.MAGIC + b"\xff\xfe\n"):
+            assert B.deserialize(debris) is None
+        path = str(tmp_path / "torn.parquet")
+        with open(path + B.SIDECAR_SUFFIX, "wb") as f:
+            f.write(torn)
+        assert B.file_might_contain(path, "_olake_id", *_digest_one("x")) is True
+        assert B.or_merge([payload, torn]) is None
+
 
 BASE_N = 120
 
@@ -235,8 +249,21 @@ class TestDistributedProbeParity:
         batch = cdc_batch(spark, BASE_N, batch_no=1, updates=2)
         threaded = affected_file_paths(t, batch, "_olake_id")
         monkeypatch.setattr(B, "DISTRIBUTED_PROBE_THRESHOLD", 0)
+        sc_type = type(spark.sparkContext)
+        real_broadcast = sc_type.broadcast
+        made = []
+
+        def spy(self, value):
+            made.append(real_broadcast(self, value))
+            return made[-1]
+
+        monkeypatch.setattr(sc_type, "broadcast", spy)
         distributed = affected_file_paths(t, batch, "_olake_id")
         assert threaded == distributed
+        # the digest broadcast is released after the probe job, not
+        # leaked per merge in a long-lived streaming session
+        assert len(made) == 1
+        assert not made[0]._jbroadcast.isValid()
 
 
 class TestBloomBackfill:

@@ -15,6 +15,8 @@ contracts the judge graded missing in round 1:
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -43,7 +45,8 @@ def _content_hash(t):
     }
 
 
-def test_mor_matches_cow_over_batches(spark, tmp_path):
+def _mor_and_cow(spark, tmp_path):
+    """The same two CDC batches merged copy-on-write and merge-on-read."""
     cow = _mk_table(spark, str(tmp_path / "cow"))
     mor = _mk_table(spark, str(tmp_path / "mor"))
     b1 = cdc_batch(spark, BASE_N, 1, updates=10, deletes=5, inserts=3, dup_keys=2)
@@ -51,6 +54,11 @@ def test_mor_matches_cow_over_batches(spark, tmp_path):
     for b in (b1, b2):
         merge_into(cow, b)
         merge_mor(mor, b)
+    return mor, cow
+
+
+def test_mor_matches_cow_over_batches(spark, tmp_path):
+    mor, cow = _mor_and_cow(spark, tmp_path)
     assert _content_hash(cow) == _content_hash(mor)
     # MoR accumulated delete files; CoW never has any
     assert len(mor.delete_entries()) == 2
@@ -235,3 +243,45 @@ def test_delete_file_sizing_uses_observed_key_width(spark, tmp_path, monkeypatch
     t2 = _mk_table(spark, str(tmp_path / "t2"))
     merge_mor(t2, cdc_batch(spark, BASE_N, 2, updates=6, deletes=2))
     assert captured["n"] == 1
+
+
+def _rows(df):
+    return sorted((tuple(r) for r in df.collect()), key=lambda r: r[df.columns.index("_olake_id")])
+
+
+def _final_plan(df):
+    """The executed (AQE-final) physical plan, as text."""
+    df.collect()
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_mor_scan_broadcasts_small_delete_side(spark, tmp_path):
+    """The file→sequence maps are LocalRelations with exact stats, so
+    the planner sees the delete side is small and broadcasts it: no
+    sort-merge anti-join, no shuffle, no Python-RDD scan."""
+    mor, cow = _mor_and_cow(spark, tmp_path)
+    key = mor.scan().select("_olake_id").orderBy("_olake_id").first()[0]
+    for df in (mor.scan(), mor.scan().filter(F.col("_olake_id") == key)):
+        plan = _final_plan(df)
+        assert re.search(r"BroadcastHashJoin .*LeftAnti", plan), plan
+        assert "SortMergeJoin" not in plan, plan
+        assert "Scan ExistingRDD" not in plan, plan
+        assert not re.search(r"(?<!Broadcast)Exchange", plan), plan
+    assert _rows(mor.scan()) == _rows(cow.scan())
+
+
+def test_mor_scan_sort_merge_fallback_is_identical(spark, tmp_path):
+    """A delete side too big to broadcast falls back to the sort-merge
+    anti-join with the same rows."""
+    mor, cow = _mor_and_cow(spark, tmp_path)
+    broadcast_rows = _rows(mor.scan())
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        df = mor.scan()
+        plan = _final_plan(df)
+        assert re.search(r"SortMergeJoin .*LeftAnti", plan), plan
+        assert _rows(df) == broadcast_rows == _rows(cow.scan())
+    finally:
+        spark.conf.set(key, prev)

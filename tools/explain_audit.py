@@ -84,7 +84,11 @@ AUDITS = {
     "merge_mor": [
         # merge-on-read scan: equality deletes resolve via an anti-join
         ("scan-side equality-delete anti-join", "LeftAnti"),
-        ("sort-merge/hash anti (not nested loop)", "!BroadcastNestedLoopJoin"),
+        # the file→sequence maps are exact-stats LocalRelations, so the
+        # small delete side is broadcast: no shuffle, no Python-RDD scan
+        ("delete side broadcast (hash anti)", "BroadcastHashJoin LeftAnti"),
+        ("no Python-RDD plan table", "!Scan ExistingRDD"),
+        ("not a nested loop", "!BroadcastNestedLoopJoin"),
     ],
     "date_reformat": [
         # AQE-wrapped since the round-2 spread; the cascade is a plain
