@@ -12,13 +12,12 @@ over a synthetic audio-clip table, and prints ONE JSON line:
 
 Scaling mode — the north-rule N→4N evidence (sandbox proxy per
 BASELINE.md: same job at two parallelism levels):
-    python bench.py --scaling
-runs the maintenance pipeline in two fresh subprocesses at local[8]
-and local[32] on the SAME input size, reports clips/sec at both and
-efficiency = thr(4N) / (4 × thr(N)); writes BENCH_SCALING.json.
-
-Internal: ``--maint-only`` runs just the pipeline in-process and
-prints its JSON (used by --scaling subprocesses).
+    python bench.py --scaling-stages [N_CLIPS]
+freezes each gated stage's input table once (``--build-states``), then
+times each stage alone at local[lo] and local[hi] against that frozen
+input (``--stage-only`` subprocesses, interleaved), and reports
+efficiency = thr(hi) / ((hi/lo) × thr(lo)) over the summed per-stage
+minima; writes BENCH_SCALING.json.
 
 All timings materialize DataFrames with the noop sink (no driver-side
 collect — measuring the distributed plan, not row transfer).
@@ -286,8 +285,8 @@ def main_default() -> None:
     # repeat + min-reduce: single-shot stage timings on this host swing
     # 2-4x run-to-run under sustained all-core load (hypervisor noise —
     # measured identical code at 19s and 49s pipeline on different
-    # occasions); the min is the same noise-floor estimator --scaling
-    # uses. SPARK_GRAFT_MAINT_REPEATS=1 restores the old single run.
+    # occasions); the min is the same noise-floor estimator
+    # --scaling-stages uses. SPARK_GRAFT_MAINT_REPEATS=1 restores the old single run.
     repeats = max(1, int(os.environ.get("SPARK_GRAFT_MAINT_REPEATS", "2")))
     maint = None
     for _ in range(repeats):
@@ -380,24 +379,6 @@ def main_default() -> None:
     }
     print(flush=True)
     print(json.dumps(minimal, separators=(",", ":")), flush=True)
-
-
-def main_maint_only(cores: int, n_clips: int) -> None:
-    from olake_spark.session import get_spark
-
-    os.environ.setdefault("OLAKE_SPARK_DRIVER_MEM", "48g")
-    spark = get_spark(
-        f"maint-bench-{cores}",
-        cores=cores,
-        extra_conf={"spark.local.dir": bench_workdir("spark_local_")},
-    )
-    spark.range(1_000_000).selectExpr("sum(id)").collect()
-    workdir = bench_workdir(f"olake_scale_{cores}_")
-    try:
-        maint = run_maintenance(spark, n_clips, workdir)
-    finally:
-        shutil.rmtree(workdir, ignore_errors=True)
-    print(json.dumps({"cores": cores, **maint}), flush=True)
 
 
 GATED_STAGES = ("compact", "merge", "zorder", "hilbert")
@@ -513,9 +494,8 @@ def main_stage_only(stage: str, cores: int, state_dir: str, n_clips: int) -> Non
 def main_scaling_stages(n_clips: int, lo: int = 2, hi: int = 8, repeats: int | None = None) -> None:
     """North-rule scaling evidence, stage-interleaved estimator.
 
-    The gate has always been computed from PER-STAGE minima (the
-    composite best() in main_scaling); this mode estimates those same
-    minima directly: each gated stage runs as its own short timed unit
+    The gate is computed from PER-STAGE minima, estimated directly:
+    each gated stage runs as its own short timed unit
     against a frozen identical input, with the lo/hi core counts
     back-to-back so both sides of a pair sample the same host window.
     On a host whose memory bandwidth swings 2-4x minute-to-minute
@@ -524,7 +504,7 @@ def main_scaling_stages(n_clips: int, lo: int = 2, hi: int = 8, repeats: int | N
     repeats, where one bad minute poisons a 2-4 minute run.
 
     Efficiency: thr(hi) / ((hi/lo) x thr(lo)) over the summed stage
-    minima — the same formula main_scaling applies to its composite.
+    minima.
     """
     if repeats is None:
         repeats = int(os.environ.get("OLAKE_SCALING_REPEATS", "6"))
@@ -619,11 +599,6 @@ def main_scaling_stages(n_clips: int, lo: int = 2, hi: int = 8, repeats: int | N
     print(json.dumps(out), flush=True)
 
 
-SPARK_HOME = os.path.join(
-    os.path.dirname(os.path.abspath(__import__("pyspark").__file__))
-)
-
-
 def _bw_worker(secs: float) -> int:
     import numpy as np
 
@@ -648,165 +623,8 @@ def _mem_bandwidth_probe(procs: int = 8, secs: float = 2.0) -> float:
     return round(sum(res) / el / 1024, 1)
 
 
-class StandaloneCluster:
-    """A local standalone master + K single-core workers, so an app's
-    ``spark.cores.max=N`` yields exactly N single-core executors —
-    a true multi-executor cluster on one box (spark-submit-compatible)."""
-
-    def __init__(self, n_workers: int = 8, mem: str = "7g"):
-        self.n_workers = n_workers
-        self.mem = mem
-        self.procs: list[subprocess.Popen] = []
-        self.master_url = "spark://127.0.0.1:7077"
-
-    def start(self) -> None:
-        spark_class = os.path.join(SPARK_HOME, "bin", "spark-class")
-        logdir = tempfile.mkdtemp(prefix="olake_cluster_")
-        env = dict(os.environ, SPARK_HOME=SPARK_HOME)
-
-        def launch(args, name):
-            f = open(os.path.join(logdir, name + ".log"), "w")
-            p = subprocess.Popen(args, stdout=f, stderr=subprocess.STDOUT, env=env)
-            self.procs.append(p)
-
-        launch(
-            [spark_class, "org.apache.spark.deploy.master.Master",
-             "--host", "127.0.0.1", "--port", "7077", "--webui-port", "0"],
-            "master",
-        )
-        time.sleep(8)
-        for i in range(self.n_workers):
-            launch(
-                [spark_class, "org.apache.spark.deploy.worker.Worker",
-                 self.master_url, "--host", "127.0.0.1", "--cores", "1",
-                 "--memory", self.mem, "--webui-port", "0",
-                 "--work-dir", bench_workdir(f"olake_worker_{i}_")],
-                f"worker-{i}",
-            )
-        time.sleep(10)
-
-    def stop(self) -> None:
-        for p in self.procs:
-            p.terminate()
-        for p in self.procs:
-            try:
-                p.wait(timeout=10)
-            except Exception:
-                p.kill()
-
-
-def main_scaling(n_clips: int, lo: int = 2, hi: int = 8, repeats: int | None = None) -> None:
-    """North-rule scaling evidence: the same maintenance job graph at
-    N vs 4N cores; efficiency = thr(4N) / ((4N/N) × thr(N)).
-
-    Measurement mode is taskset-pinned local[N] — one JVM whose task,
-    GC and IO threads all share exactly N cores, i.e. an honest
-    N-core machine. (Cluster mode with per-core executor JVMs routes
-    7/8 of the shuffle through loopback TCP, which this host's
-    fluctuating memory bandwidth penalizes ~4×; the standalone-cluster
-    path in this file remains the spark-submit deployment check, run
-    it via OLAKE_SCALING_MODE=cluster.)
-
-    The host's bandwidth fluctuates ~20× minute-to-minute (probe
-    reported per run), so configs are interleaved [N, 4N] × repeats
-    and each config's per-stage time is the MIN across repeats — the
-    least-contended estimate of capability."""
-    if repeats is None:
-        # more repeats → tighter noise-floor estimate on a host whose
-        # availability swings 2-4× minute-to-minute (min estimator)
-        repeats = int(os.environ.get("OLAKE_SCALING_REPEATS", "3"))
-    cluster_mode = os.environ.get("OLAKE_SCALING_MODE") == "cluster"
-    cluster = None
-    master_url = None
-    if cluster_mode:
-        log(f"== starting standalone cluster: {hi} single-core workers ==")
-        cluster = StandaloneCluster(n_workers=hi)
-        cluster.start()
-        master_url = cluster.master_url
-
-    runs: dict[int, list[dict]] = {lo: [], hi: []}
-    try:
-        for r in range(repeats):
-            for cores in (lo, hi):
-                probe = _mem_bandwidth_probe()
-                log(f"== run {r + 1}/{repeats} cores={cores} host_bw={probe} GB/s ==")
-                env = dict(os.environ)
-                env.setdefault("OLAKE_SPARK_DRIVER_MEM", "24g")
-                cmd = [sys.executable, __file__, "--maint-only", str(cores), str(n_clips)]
-                if cluster_mode:
-                    env["OLAKE_SPARK_MASTER"] = master_url
-                else:
-                    env.pop("OLAKE_SPARK_MASTER", None)
-                    cmd = ["taskset", "-c", f"0-{cores - 1}"] + cmd
-                p = subprocess.run(
-                    cmd, capture_output=True, text=True, env=env, cwd=HERE
-                )
-                if p.returncode != 0:
-                    log(p.stderr[-4000:])
-                    raise SystemExit(f"scaling run at {cores} cores failed")
-                rec = json.loads(p.stdout.strip().splitlines()[-1])
-                rec["host_bw_gbps"] = probe
-                runs[cores].append(rec)
-    finally:
-        if cluster is not None:
-            cluster.stop()
-
-    def best(recs: list[dict]) -> dict:
-        stages = {
-            k: min(r["stages_sec"][k] for r in recs)
-            for k in recs[0]["stages_sec"]
-        }
-        core_s = sum(
-            stages[k]
-            for k in ("maint_compact", "maint_merge", "maint_zorder", "maint_hilbert")
-        )
-        n = recs[0]["n_clips"]
-        return {
-            "stages_sec": stages,
-            "pipeline_sec": round(sum(stages.values()), 3),
-            "maintenance_sec": round(core_s, 3),
-            "maintenance_clips_per_sec": round(4 * n / core_s, 1),
-            "clips_per_sec": round(n / sum(stages.values()), 1),
-            "host_bw_gbps_per_run": [r["host_bw_gbps"] for r in recs],
-            "all_maintenance_sec": [r["maintenance_sec"] for r in recs],
-        }
-
-    results = {lo: best(runs[lo]), hi: best(runs[hi])}
-    ratio = hi / lo
-    thr_lo = results[lo]["maintenance_clips_per_sec"]
-    thr_hi = results[hi]["maintenance_clips_per_sec"]
-    eff = thr_hi / (ratio * thr_lo)
-    e2e_eff = results[hi]["clips_per_sec"] / (ratio * results[lo]["clips_per_sec"])
-    out = {
-        "metric": "scaling_efficiency",
-        "value": round(eff, 3),
-        "unit": "ratio",
-        "n_clips": n_clips,
-        "runs": {
-            f"local[{c}]": {
-                "maintenance_clips_per_sec": results[c]["maintenance_clips_per_sec"],
-                "clips_per_sec": results[c]["clips_per_sec"],
-                "pipeline_sec": results[c]["pipeline_sec"],
-                "stages_sec": results[c]["stages_sec"],
-                "all_maintenance_sec": results[c]["all_maintenance_sec"],
-                "host_bw_gbps_per_run": results[c]["host_bw_gbps_per_run"],
-            }
-            for c in (lo, hi)
-        },
-        "speedup": round(thr_hi / thr_lo, 3),
-        "e2e_efficiency": round(e2e_eff, 3),
-        "cores_ratio": ratio,
-    }
-    with open(os.path.join(HERE, "BENCH_SCALING.json"), "w") as f:
-        json.dump(out, f, indent=2)
-    print(json.dumps(out), flush=True)
-
-
 if __name__ == "__main__":
-    if "--maint-only" in sys.argv:
-        i = sys.argv.index("--maint-only")
-        main_maint_only(int(sys.argv[i + 1]), int(sys.argv[i + 2]))
-    elif "--build-states" in sys.argv:
+    if "--build-states" in sys.argv:
         i = sys.argv.index("--build-states")
         main_build_states(sys.argv[i + 1], int(sys.argv[i + 2]))
     elif "--stage-only" in sys.argv:
@@ -818,10 +636,5 @@ if __name__ == "__main__":
         i = sys.argv.index("--scaling-stages")
         n = int(sys.argv[i + 1]) if len(sys.argv) > i + 1 else 192_000
         main_scaling_stages(n)
-    elif "--scaling" in sys.argv:
-        n = int(sys.argv[sys.argv.index("--scaling") + 1]) if len(
-            sys.argv
-        ) > sys.argv.index("--scaling") + 1 else 48_000
-        main_scaling(n)
     else:
         main_default()

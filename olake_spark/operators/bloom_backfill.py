@@ -7,40 +7,40 @@ backfill needs NO snapshot commit: each sidecar write is independently
 idempotent, concurrent writers of the same sidecar converge (same
 deterministic bytes for the same file), and a crash mid-sweep just
 leaves some files still conservatively un-bloomed. That makes the op
-trivially resumable — re-running skips files whose sidecars already
-exist — and safe to run concurrently with ingest/merge (a new data
-file gets its sidecar from its own harvest; this op only ever touches
-files that are ALREADY live and missing one).
+trivially resumable — re-running skips files that already have a whole
+sidecar for the target column — and safe to run concurrently with
+ingest/merge (a new data file gets its sidecar from its own harvest;
+this op only ever touches files that are ALREADY live).
 
-Scale shape mirrors the footer harvest (table/stats.py): the work unit
-is one file (read its key column, build, write sidecar — cost ∝ that
-file's key bytes), fanned out as a Spark job above the distributed
-threshold and a driver thread pool below it. No shuffle anywhere; the
+The work unit is one file (read its key column, build, write sidecar —
+cost ∝ that file's key bytes), fanned out through ``fsio.map_files``
+like the footer harvest and the MERGE probe. No shuffle anywhere; the
 driver only ever holds the path list and per-file status strings.
 """
 
 from __future__ import annotations
 
-from concurrent.futures import ThreadPoolExecutor
+import pyarrow.parquet as papq
 
 from olake_spark.table import bloom as bloom_mod
-from olake_spark.table.stats import DISTRIBUTED_THRESHOLD
+from olake_spark.table.fsio import fs_for, map_files
 from olake_spark.table.table import Table
 
 
-def _build_one(abs_path: str, col: str, fpp: float) -> str:
+def _build_one(abs_path: str, shared: tuple[str, float]) -> str:
     """Build+write one file's sidecar; returns a status tag.
 
-    Module-level (not a closure) so the Spark path and the thread-pool
-    path run the EXACT same code — the two fan-outs cannot drift.
+    An existing sidecar counts as done only if it parses and covers
+    ``col``: a torn write or a sidecar for a previous
+    ``write.bloom.column`` is rebuilt.
     """
-    import pyarrow.parquet as papq
-
-    from olake_spark.table.fsio import fs_for
-
+    col, fpp = shared
     fs, fs_path = fs_for(abs_path)
-    if bloom_mod.read_sidecar(fs_path, fs=fs) is not None:
-        return "skipped"
+    existing = bloom_mod.read_sidecar(fs_path, fs=fs)
+    if existing is not None:
+        parsed = bloom_mod.deserialize(existing)
+        if parsed is not None and parsed[0].get("col") == col:
+            return "skipped"
     try:
         pf = papq.ParquetFile(fs_path, filesystem=fs)
     except (FileNotFoundError, OSError):
@@ -60,12 +60,8 @@ def _build_one(abs_path: str, col: str, fpp: float) -> str:
     return "built"
 
 
-def build_blooms(
-    table: Table,
-    fpp: float | None = None,
-    max_workers: int = 16,
-) -> dict:
-    """Backfill sidecars for every live data file missing one.
+def build_blooms(table: Table, fpp: float | None = None) -> dict:
+    """Backfill sidecars for every live data file missing a valid one.
 
     Requires ``write.bloom.column`` to be set on the table — backfill
     for a column the write path will not maintain would silently decay
@@ -79,19 +75,7 @@ def build_blooms(
         )
     use_fpp = table.bloom_fpp if fpp is None else float(fpp)
     paths = [table.abs_entry_path(e) for e in table.data_entries()]
-    if len(paths) > DISTRIBUTED_THRESHOLD:
-        sc = table.spark.sparkContext
-        n = min(len(paths), sc.defaultParallelism * 4)
-
-        def part(items):
-            from olake_spark.operators.bloom_backfill import _build_one as one
-
-            return [one(p, col, use_fpp) for p in items]
-
-        statuses = sc.parallelize(paths, n).mapPartitions(part).collect()
-    else:
-        with ThreadPoolExecutor(max_workers=max_workers) as ex:
-            statuses = list(ex.map(lambda p: _build_one(p, col, use_fpp), paths))
+    statuses = map_files(table.spark, paths, _build_one, (col, use_fpp))
     out = {"files": len(paths), "built": 0, "skipped": 0, "unsupported": 0, "missing": 0}
     for s in statuses:
         out[s] += 1

@@ -52,7 +52,7 @@ import json
 import numpy as np
 
 from olake_spark.functions.hashing import mmh3_32_bytes
-from olake_spark.table.fsio import fs_for
+from olake_spark.table.fsio import fs_for, map_files
 
 MAGIC = b"OLBF1\n"
 SIDECAR_SUFFIX = ".bloom"
@@ -270,10 +270,6 @@ def delete_sidecar(abs_data_path: str, fs=None) -> None:
 #: entirely: the digest broadcast would be >~16 MB and a batch that big
 #: touches most files anyway, so bounds-only pruning is the right call.
 PROBE_KEY_CAP = 1_000_000
-#: above this many candidate files the probe runs as a Spark job
-#: (sidecar reads on executors); below, a driver thread pool is cheaper
-#: than job scheduling.
-DISTRIBUTED_PROBE_THRESHOLD = 256
 
 
 def file_might_contain(abs_data_path: str, col: str, h1: np.ndarray, h2: np.ndarray) -> bool:
@@ -293,44 +289,18 @@ def file_might_contain(abs_data_path: str, col: str, h1: np.ndarray, h2: np.ndar
     return might_contain_any(header, bits, h1, h2)
 
 
-def probe_files(
-    spark,
-    abs_paths: list[str],
-    col: str,
-    h1: np.ndarray,
-    h2: np.ndarray,
-    max_workers: int = 16,
-) -> list[str]:
-    """Subset of ``abs_paths`` that might contain ANY probed key.
+def _probe_one(abs_data_path: str, shared) -> bool:
+    col, h1, h2 = shared
+    return file_might_contain(abs_data_path, col, h1, h2)
 
-    Mirrors the footer-harvest split (table/stats.py): a Spark job over
-    the path list above DISTRIBUTED_PROBE_THRESHOLD — each executor
-    re-imports this module and probes its slice against the broadcast
-    digest arrays (two uint64 vectors, ≤16 MB at PROBE_KEY_CAP) — and a
-    driver thread pool below it. Output order follows input order so
-    callers stay deterministic regardless of which path ran.
+
+def probe_files(spark, abs_paths: list[str], col: str, h1: np.ndarray, h2: np.ndarray) -> list[str]:
+    """Subset of ``abs_paths`` that might contain ANY probed key, in
+    input order.
+
+    Fans out per file through ``fsio.map_files``; on its Spark-job
+    path each executor probes its slice against the broadcast
+    ``(col, h1, h2)`` (two uint64 vectors, ≤16 MB at PROBE_KEY_CAP).
     """
-    if not abs_paths:
-        return []
-    if spark is not None and len(abs_paths) > DISTRIBUTED_PROBE_THRESHOLD:
-        sc = spark.sparkContext
-        bc = sc.broadcast((h1, h2))
-
-        def part(paths):
-            from olake_spark.table import bloom as B
-
-            bh1, bh2 = bc.value
-            return [p for p in paths if B.file_might_contain(p, col, bh1, bh2)]
-
-        n = min(len(abs_paths), sc.defaultParallelism * 4)
-        try:
-            hits = set(sc.parallelize(abs_paths, n).mapPartitions(part).collect())
-        finally:
-            bc.destroy()
-    else:
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=max_workers) as ex:
-            flags = list(ex.map(lambda p: file_might_contain(p, col, h1, h2), abs_paths))
-        hits = {p for p, f in zip(abs_paths, flags) if f}
-    return [p for p in abs_paths if p in hits]
+    flags = map_files(spark, abs_paths, _probe_one, (col, h1, h2))
+    return [p for p, f in zip(abs_paths, flags) if f]

@@ -1,4 +1,5 @@
-"""Filesystem abstraction for the engine's direct byte paths.
+"""Filesystem abstraction and per-file fan-out for the engine's direct
+byte paths.
 
 ``table.location`` may be a plain POSIX path (tests, NFS, FUSE mounts)
 or a URI (``file://``, ``s3://``, ``hdfs://`` …). Everything that
@@ -7,7 +8,9 @@ touches bytes OUTSIDE Spark — the compaction row-group copy
 (table/stats.file_entry) — resolves its filesystem through
 ``pyarrow.fs.FileSystem.from_uri`` here, so the no-decode fast paths
 survive non-POSIX object storage unchanged (pyarrow ships S3/GCS/HDFS
-implementations behind the same interface).
+implementations behind the same interface). Per-file metadata work
+(footer harvest, MERGE bloom probe, ``build_blooms``) fans out through
+the one ``map_files``.
 
 The commit protocol is abstracted separately: commit atomicity is a
 pluggable backend (table/format.FileCommitBackend — POSIX ``O_EXCL``
@@ -18,8 +21,14 @@ need) — see README "Deployment surfaces".
 from __future__ import annotations
 
 import os
+from concurrent.futures import ThreadPoolExecutor
 
 from pyarrow import fs as pafs
+
+#: above this many items ``map_files`` runs as a Spark job; below it a
+#: per-file read is ms-scale and job scheduling would dominate
+DISTRIBUTED_THRESHOLD = 256
+POOL_THREADS = 16
 
 
 def fs_for(path: str) -> tuple[pafs.FileSystem, str]:
@@ -42,3 +51,30 @@ def file_size(path: str, fs: pafs.FileSystem | None = None) -> int:
     if info.type == pafs.FileType.NotFound:
         raise FileNotFoundError(path)
     return info.size
+
+
+def map_files(spark, items: list, fn, shared=None) -> list:
+    """``[fn(item, shared) for item in items]``, in input order.
+
+    Up to ``DISTRIBUTED_THRESHOLD`` items (or with no ``spark``) the
+    calls run on a driver thread pool; above it, as one Spark job whose
+    executors do the per-file IO and return only ``fn``'s small
+    results. There ``shared`` is broadcast once and destroyed after the
+    collect, so a long-lived session does not leak one per call.
+    ``fn`` is module-level so executors import the same code by name.
+    """
+    if spark is None or len(items) <= DISTRIBUTED_THRESHOLD:
+        with ThreadPoolExecutor(max_workers=POOL_THREADS) as ex:
+            return list(ex.map(lambda item: fn(item, shared), items))
+    sc = spark.sparkContext
+    bc = sc.broadcast(shared)
+
+    def part(chunk):
+        value = bc.value
+        return [fn(item, value) for item in chunk]
+
+    try:
+        n = min(len(items), sc.defaultParallelism * 4)
+        return sc.parallelize(items, n).mapPartitions(part).collect()
+    finally:
+        bc.destroy()

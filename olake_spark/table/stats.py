@@ -2,35 +2,23 @@
 
 After a Spark write, we read only the footers (not the data) of the
 produced files to build manifest entries: row counts, byte sizes, and
-min/max bounds for the tracked stats columns. Two execution paths with
-identical output:
-
-- driver thread pool (``harvest``): footer reads are a few KiB each —
-  for up-to-hundreds of files the driver finishes before a Spark job
-  could even schedule.
-- Spark job (``harvest_distributed``): above ``DISTRIBUTED_THRESHOLD``
-  files the driver would serialize metadata IO; the same pure
-  paths-in/entries-out function runs as an RDD ``mapPartitions`` over
-  the path list (executors read footers locally in parallel), and only
-  the manifest-sized entry rows return to the driver. This is the path
-  a million-file commit takes at fleet scale.
+min/max bounds for the tracked stats columns. ``harvest`` fans the
+per-file ``file_entry`` out through ``fsio.map_files``: footer reads
+are a few KiB each, so a commit of up to hundreds of files finishes on
+a driver thread pool before a Spark job could even schedule, and a
+fleet-scale commit runs the same function as a Spark job over the path
+list, returning only the manifest-sized entries to the driver.
 """
 
 from __future__ import annotations
 
 import os
-from concurrent.futures import ThreadPoolExecutor
 
 import pyarrow.parquet as papq
 
 from olake_spark.table import bloom as bloom_mod
 from olake_spark.table.format import DataFileEntry
-from olake_spark.table.fsio import file_size, fs_for
-
-#: switch write_datafiles harvesting to the Spark-job path above this
-#: many files per commit (footer ≈ ms each; below this the job-launch
-#: overhead dominates)
-DISTRIBUTED_THRESHOLD = 256
+from olake_spark.table.fsio import file_size, fs_for, map_files
 
 DEFAULT_STATS_COLS = ["_olake_id", "clip_id", "_cdc_timestamp", "dur_ms", "sr_hz"]
 
@@ -61,8 +49,8 @@ def file_entry(
     ``bloom_col``: also build the file's key-bloom sidecar
     (table/bloom.py). This is the ONE place the harvest reads column
     DATA (that single column, decoded once) rather than footer bytes —
-    cost proportional to data just written, on the same distributed
-    path as the footer reads above DISTRIBUTED_THRESHOLD.
+    cost proportional to data just written, on the same fan-out as the
+    footer reads.
     """
     fs, fs_path = fs_for(abs_path)
     pf = papq.ParquetFile(fs_path, filesystem=fs)
@@ -103,78 +91,25 @@ def file_entry(
     )
 
 
+def _harvest_one(item: tuple[str, str], shared) -> DataFileEntry:
+    abs_path, partition = item
+    location, stats_cols, bloom_col, bloom_fpp = shared
+    rel = os.path.relpath(abs_path, location)
+    return file_entry(abs_path, rel, partition, stats_cols, bloom_col, bloom_fpp)
+
+
 def harvest(
-    location: str,
-    files: list[tuple[str, str]],  # (abs_path, partition)
-    stats_cols: list[str],
-    max_workers: int = 16,
-    bloom_col: str | None = None,
-    bloom_fpp: float = 0.01,
-) -> list[DataFileEntry]:
-    def one(item):
-        abs_path, partition = item
-        rel = os.path.relpath(abs_path, location)
-        return file_entry(abs_path, rel, partition, stats_cols, bloom_col, bloom_fpp)
-
-    with ThreadPoolExecutor(max_workers=max_workers) as ex:
-        return list(ex.map(one, files))
-
-
-def harvest_distributed(
     spark,
     location: str,
     files: list[tuple[str, str]],  # (abs_path, partition)
     stats_cols: list[str],
-    slices: int | None = None,
     bloom_col: str | None = None,
     bloom_fpp: float = 0.01,
 ) -> list[DataFileEntry]:
-    """Footer harvest as a Spark job: ship (path, partition) pairs to
-    executors, read footers there, return manifest entries. Entries are
-    tiny (a few hundred bytes) so the collect is manifest-scale, never
-    data-scale. Output is byte-identical to ``harvest`` — pytest pins
-    the equivalence.
+    """One manifest entry per file, in input order, so manifests are
+    deterministic whichever ``map_files`` path ran."""
+    return map_files(spark, files, _harvest_one, (location, stats_cols, bloom_col, bloom_fpp))
 
-    The closure captures only (location, stats_cols) strings; the
-    harvesting logic is the same module-level ``file_entry`` the driver
-    path uses, so the two paths cannot drift.
-    """
-    if not files:
-        return []
-    sc = spark.sparkContext
-    n = slices or min(len(files), sc.defaultParallelism * 4)
 
-    def part(items):
-        out = []
-        for abs_path, partition in items:
-            rel = os.path.relpath(abs_path, location)
-            e = file_entry(abs_path, rel, partition, stats_cols, bloom_col, bloom_fpp)
-            out.append(
-                (
-                    e.path,
-                    e.partition,
-                    e.record_count,
-                    e.file_size_bytes,
-                    e.lower_bounds,
-                    e.upper_bounds,
-                )
-            )
-        return out
-
-    rows = sc.parallelize(files, n).mapPartitions(part).collect()
-    entries = [
-        DataFileEntry(
-            path=p,
-            partition=pt,
-            record_count=rc,
-            file_size_bytes=sz,
-            lower_bounds=lo,
-            upper_bounds=hi,
-        )
-        for p, pt, rc, sz, lo, hi in rows
-    ]
-    # keep driver-path ordering (input file order) so manifests are
-    # deterministic regardless of partition completion order
-    order = {os.path.relpath(a, location): i for i, (a, _) in enumerate(files)}
-    entries.sort(key=lambda e: order[e.path])
-    return entries
+# perfbench/trace.py TRACE_POINTS resolves this name with getattr
+harvest_distributed = harvest

@@ -552,18 +552,10 @@ class Table:
         # files are never MERGE rewrite targets, so a sidecar would be
         # dead weight
         bloom_col = self.bloom_col if content == fmt.CONTENT_DATA else None
-        if len(files) > stats_mod.DISTRIBUTED_THRESHOLD:
-            # fleet-scale commits: harvest footers as a Spark job so the
-            # driver never serializes per-file metadata IO
-            entries = stats_mod.harvest_distributed(
-                self.spark, self.location, files, stats_cols,
-                bloom_col=bloom_col, bloom_fpp=self.bloom_fpp,
-            )
-        else:
-            entries = stats_mod.harvest(
-                self.location, files, stats_cols,
-                bloom_col=bloom_col, bloom_fpp=self.bloom_fpp,
-            )
+        entries = stats_mod.harvest(
+            self.spark, self.location, files, stats_cols,
+            bloom_col=bloom_col, bloom_fpp=self.bloom_fpp,
+        )
         if content != fmt.CONTENT_DATA:
             for e in entries:
                 e.content = content

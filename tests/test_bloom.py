@@ -17,6 +17,7 @@ from olake_spark.operators.expire import expire_snapshots
 from olake_spark.operators.gc import remove_orphan_files
 from olake_spark.operators.merge import affected_file_paths, merge_into
 from olake_spark.table import bloom as B
+from olake_spark.table import fsio
 from olake_spark.table.table import BLOOM_COL_PROP, Table
 
 FUTURE_MS = 2**53
@@ -248,7 +249,7 @@ class TestDistributedProbeParity:
         t = bloom_table
         batch = cdc_batch(spark, BASE_N, batch_no=1, updates=2)
         threaded = affected_file_paths(t, batch, "_olake_id")
-        monkeypatch.setattr(B, "DISTRIBUTED_PROBE_THRESHOLD", 0)
+        monkeypatch.setattr(fsio, "DISTRIBUTED_THRESHOLD", 0)
         sc_type = type(spark.sparkContext)
         real_broadcast = sc_type.broadcast
         made = []
@@ -308,6 +309,49 @@ class TestBloomBackfill:
         # idempotent re-run: resumability is "skip what exists"
         res2 = build_blooms(t)
         assert res2["built"] == 0 and res2["skipped"] == n_files
+
+    def test_torn_sidecar_is_rebuilt(self, spark, late_optin_table):
+        from olake_spark.operators.bloom_backfill import build_blooms
+
+        t = late_optin_table
+        build_blooms(t)
+        torn = t.abs_entry_path(t.data_entries()[0])
+        with open(torn + B.SIDECAR_SUFFIX, "wb") as f:
+            f.write(B.MAGIC + b'{"col": ')
+        res = build_blooms(t)
+        assert res["built"] == 1 and res["skipped"] == res["files"] - 1
+        header, _ = B.deserialize(open(torn + B.SIDECAR_SUFFIX, "rb").read())
+        assert header["col"] == "_olake_id"
+
+    def test_column_switch_rebuilds(self, spark, late_optin_table):
+        """Sidecars for the previous write.bloom.column do not count as
+        done for the new one."""
+        from olake_spark.operators.bloom_backfill import build_blooms
+
+        t = late_optin_table
+        build_blooms(t)
+        t.update_properties({"write.bloom.column": "clip_id"})
+        res = build_blooms(t)
+        assert res["built"] == res["files"] and res["skipped"] == 0
+        for e in t.data_entries():
+            payload = open(t.abs_entry_path(e) + B.SIDECAR_SUFFIX, "rb").read()
+            assert B.deserialize(payload)[0]["col"] == "clip_id"
+        res2 = build_blooms(t)
+        assert res2["skipped"] == res2["files"] and res2["built"] == 0
+
+    def test_spark_job_backfill_matches_threaded(self, spark, late_optin_table, monkeypatch):
+        from olake_spark.operators.bloom_backfill import build_blooms
+
+        t = late_optin_table
+        sidecars = [t.abs_entry_path(e) + B.SIDECAR_SUFFIX for e in t.data_entries()]
+        threaded = build_blooms(t)
+        threaded_bytes = [open(p, "rb").read() for p in sidecars]
+        for p in sidecars:
+            os.remove(p)
+        monkeypatch.setattr(fsio, "DISTRIBUTED_THRESHOLD", 0)
+        distributed = build_blooms(t)
+        assert distributed == threaded
+        assert [open(p, "rb").read() for p in sidecars] == threaded_bytes
 
     def test_pruning_works_after_backfill(self, spark, late_optin_table):
         from olake_spark.operators.bloom_backfill import build_blooms

@@ -138,10 +138,11 @@ class TestTable:
 
 
 class TestDistributedHarvest:
-    def test_spark_job_harvest_matches_driver_path(self, spark, tmp_table_dir):
+    def test_spark_job_harvest_matches_driver_path(self, spark, tmp_table_dir, monkeypatch):
         """The Spark-job footer harvest must be byte-identical to the
         driver thread-pool path (same file_entry function executes in
         both; this pins that the RDD round-trip loses nothing)."""
+        from olake_spark.table import fsio
         from olake_spark.table import stats as stats_mod
 
         t = Table.create(
@@ -151,10 +152,9 @@ class TestDistributedHarvest:
         files = [
             (os.path.join(t.location, e.path), e.partition) for e in entries
         ]
-        driver_side = stats_mod.harvest(t.location, files, t.stats_cols)
-        spark_side = stats_mod.harvest_distributed(
-            spark, t.location, files, t.stats_cols
-        )
+        driver_side = stats_mod.harvest(spark, t.location, files, t.stats_cols)
+        monkeypatch.setattr(fsio, "DISTRIBUTED_THRESHOLD", 0)
+        spark_side = stats_mod.harvest(spark, t.location, files, t.stats_cols)
         assert driver_side == spark_side
 
     def test_write_datafiles_switches_above_threshold(
@@ -162,22 +162,24 @@ class TestDistributedHarvest:
     ):
         """Above DISTRIBUTED_THRESHOLD files per commit the harvest runs
         as a Spark job (fleet-scale path); entries stay correct."""
-        from olake_spark.table import stats as stats_mod
+        from olake_spark.table import fsio
 
-        monkeypatch.setattr(stats_mod, "DISTRIBUTED_THRESHOLD", 2)
-        called = {}
-        real = stats_mod.harvest_distributed
+        monkeypatch.setattr(fsio, "DISTRIBUTED_THRESHOLD", 2)
+        sc_type = type(spark.sparkContext)
+        real = sc_type.parallelize
+        shipped = []
 
-        def spy(*a, **kw):
-            called["yes"] = True
-            return real(*a, **kw)
+        def spy(self, c, numSlices=None):
+            shipped.append(list(c))
+            return real(self, c, numSlices)
 
-        monkeypatch.setattr(stats_mod, "harvest_distributed", spy)
+        monkeypatch.setattr(sc_type, "parallelize", spy)
         t = Table.create(
             spark, tmp_table_dir, "harv2", FULL_SCHEMA, identifier_fields=["_olake_id"]
         )
         entries = t.write_datafiles(generate_clips(spark, 120, partitions=6))
-        assert called.get("yes")
+        # the last job shipped the harvest's (abs_path, partition) list
+        assert [os.path.relpath(p, t.location) for p, _ in shipped[-1]] == [e.path for e in entries]
         assert len(entries) == 6
         assert sum(e.record_count for e in entries) == 120
         assert all(e.lower_bounds.get("_olake_id") for e in entries)

@@ -73,7 +73,6 @@ def main():
     from olake_spark.table.table import Table
 
     _wrap_attr(stats, "harvest", "stats.harvest")
-    _wrap_attr(stats, "harvest_distributed", "stats.harvest_distributed")
     _wrap_attr(Table, "commit_append", "commit_append")
     _wrap_attr(Table, "commit_replace", "commit_replace")
     _wrap_attr(Table, "entries", "table.entries")
