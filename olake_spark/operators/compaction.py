@@ -62,7 +62,7 @@ def _refuse_live_deletes(t: Table) -> None:
     fold — committing would silently resurrect its deleted rows (the
     row-count guard cannot see equality deletes). Conflict → the wave
     re-folds and re-runs. A commit racing past this check instead
-    loses the O_EXCL version write and re-validates after refresh."""
+    loses the create-or-fail version write and re-validates after refresh."""
     if t.delete_entries():
         raise CommitConflict("delete files committed during compaction wave")
 

@@ -18,17 +18,10 @@ from olake_spark.table import format as fmt
 from olake_spark.table.table import Table
 
 
-def expire_snapshots(
-    table: Table,
-    keep_last: int = 1,
-    older_than_ms: int | None = None,
-    dry_run: bool = False,
-) -> dict:
-    """Expire snapshots beyond the newest ``keep_last`` that are older
-    than ``older_than_ms`` (default: now). The current snapshot is
-    always retained."""
+def _plan(table: Table, keep_last: int, cutoff: int) -> dict:
+    """Which snapshots of ``table.meta`` expire, and which files and
+    manifests only they reference."""
     meta = table.meta
-    cutoff = older_than_ms if older_than_ms is not None else int(time.time() * 1000) + 1
     ordered = sorted(meta.snapshots, key=lambda s: s.sequence_number, reverse=True)
     retained, expired = [], []
     for i, s in enumerate(ordered):
@@ -40,56 +33,61 @@ def expire_snapshots(
             retained.append(s)
         else:
             expired.append(s)
+
     if not expired:
-        return {"expired": 0, "deleted_files": 0, "freed_bytes": 0}
+        return {"version": meta.version, "expired": []}
 
-    def files_of(snaps) -> dict[str, int]:
-        out: dict[str, int] = {}
-        for s in snaps:
-            for e in fmt.read_manifests(table.location, s.manifests):
-                out[e.path] = e.file_size_bytes
-        return out
-
-    live = files_of(retained)
-    dead = {p: b for p, b in files_of(expired).items() if p not in live}
-    live_manifests = {m for s in retained for m in s.manifests}
-    dead_manifests = {
-        m for s in expired for m in s.manifests if m not in live_manifests
+    live_ms = {m for s in retained for m in s.manifests}
+    dead_ms = {m for s in expired for m in s.manifests} - live_ms
+    live = {e.path for e in fmt.read_manifests(table.location, sorted(live_ms))}
+    dead = fmt.read_manifests(table.location, sorted(dead_ms))
+    return {
+        "version": meta.version,
+        "retained": sorted(retained, key=lambda s: s.sequence_number),
+        "expired": expired,
+        "dead": {e.path: e.file_size_bytes for e in dead if e.path not in live},
+        "dead_manifests": dead_ms,
     }
 
-    if not dry_run:
+
+def expire_snapshots(
+    table: Table,
+    keep_last: int = 1,
+    older_than_ms: int | None = None,
+    dry_run: bool = False,
+) -> dict:
+    """Expire snapshots beyond the newest ``keep_last`` that are older
+    than ``older_than_ms`` (default: now). The current snapshot is
+    always retained. A commit that loses a race plans again against
+    the refreshed snapshots (the plan is reused while the metadata
+    version is unchanged); files are deleted only after the commit,
+    and only those dead in the metadata it committed."""
+    cutoff = older_than_ms if older_than_ms is not None else int(time.time() * 1000) + 1
+    plan: dict = {}
+
+    def change(t: Table) -> dict | None:
+        if plan.get("version") != t.meta.version:
+            plan.update(_plan(t, keep_last, cutoff))
+        return {"snapshots": plan["retained"]} if plan["expired"] else None
+
+    if dry_run:
+        change(table)
+    elif table._commit_meta(change, "snapshot expiry") is not None:
         # metadata first (atomic version bump), then physical deletes —
         # a crash between the two leaves only harmless orphans
-        new_meta = fmt.TableMetadata(
-            table_uuid=meta.table_uuid,
-            name=meta.name,
-            location=meta.location,
-            schema_json=meta.schema_json,
-            identifier_fields=meta.identifier_fields,
-            partition_spec=meta.partition_spec,
-            properties=meta.properties,
-            current_snapshot_id=meta.current_snapshot_id,
-            snapshots=sorted(retained, key=lambda s: s.sequence_number),
-            last_sequence_number=meta.last_sequence_number,
-            version=meta.version + 1,
-        )
-        if not fmt.try_write_metadata(table.location, new_meta):
-            table.refresh()
-            return expire_snapshots(table, keep_last, older_than_ms, dry_run)
-        table.meta = new_meta
-        for rel in list(dead) + sorted(dead_manifests):
+        for rel in list(plan["dead"]) + sorted(plan["dead_manifests"]):
             p = os.path.join(table.location, rel)
-            if os.path.exists(p):
-                os.remove(p)
             # a dead data file takes its advisory key-bloom sidecar
             # (table/bloom.py) with it; no-op for manifests
-            sidecar = p + bloom_mod.SIDECAR_SUFFIX
-            if os.path.exists(sidecar):
-                os.remove(sidecar)
+            for f in (p, p + bloom_mod.SIDECAR_SUFFIX):
+                if os.path.exists(f):
+                    os.remove(f)
+    if not plan["expired"]:
+        return {"expired": 0, "deleted_files": 0, "freed_bytes": 0}
     return {
-        "expired": len(expired),
-        "retained": len(retained),
-        "deleted_files": len(dead),
-        "deleted_manifests": len(dead_manifests),
-        "freed_bytes": sum(dead.values()),
+        "expired": len(plan["expired"]),
+        "retained": len(plan["retained"]),
+        "deleted_files": len(plan["dead"]),
+        "deleted_manifests": len(plan["dead_manifests"]),
+        "freed_bytes": sum(plan["dead"].values()),
     }

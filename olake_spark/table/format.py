@@ -164,37 +164,44 @@ def write_version_hint(location: str, version: int) -> None:
 
 # --------------------------------------------------------------- commits
 #
-# Commit atomicity is PLUGGABLE: every writer funnels through
-# try_write_metadata() and every reader through read_current_metadata(),
-# both of which delegate to the active CommitBackend. The default gets
-# its atomicity from POSIX O_EXCL create (local/NFS/FUSE); the
-# CasCatalogBackend gets it from a catalog compare-and-swap instead —
-# candidate metadata uploaded under a UNIQUE name with a plain write
-# (the only primitive object stores guarantee), then one CAS of the
-# catalog's current-version pointer. Losers refresh and retry exactly
-# as before: Table._commit's validate/rebuild loop is backend-agnostic.
+# Commit atomicity is PLUGGABLE: each Table owns a commit backend and
+# every metadata write goes through try_write_metadata(backend, ...).
+# FileCommitBackend gets its atomicity from a POSIX hard link, an
+# atomic create-or-fail (local/NFS/FUSE); CasCatalogBackend gets it
+# from a catalog compare-and-swap instead — candidate metadata
+# uploaded under a UNIQUE name with a plain write (the only primitive
+# object stores guarantee), then one CAS of the catalog's
+# current-version pointer. Losers refresh and retry: the one commit
+# loop, Table._commit_meta, is backend-agnostic.
 
 
 class FileCommitBackend:
-    """Atomicity from POSIX ``O_EXCL`` create of v<N>.metadata.json
-    (mirroring Iceberg's HadoopTableOperations; retry policy parity:
-    drivers/abstract/utils.go:11-32)."""
+    """Atomicity from a hard link: v<N>.metadata.json is published by
+    linking a fully written temp file, an atomic create-or-fail that
+    never exposes a partial version (Iceberg HadoopTableOperations'
+    rename-if-absent; retry policy parity: drivers/abstract/utils.go:11-32)."""
 
-    name = "posix-o_excl"
+    name = "posix-link"
 
     def try_commit(self, location: str, meta: TableMetadata) -> bool:
+        data = meta.to_json()
         path = metadata_path(location, meta.version)
+        tmp = f"{path}.tmp.{uuid.uuid4().hex}"
+        with open(tmp, "w") as f:
+            f.write(data)
         try:
-            fd = os.open(path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
+            os.link(tmp, path)  # atomic create-or-fail of the full file
         except FileExistsError:
             return False
-        with os.fdopen(fd, "w") as f:
-            f.write(meta.to_json())
+        finally:
+            os.remove(tmp)
         write_version_hint(location, meta.version)
         return True
 
     def read_current(self, location: str) -> TableMetadata:
         v = read_version_hint(location)
+        while os.path.exists(metadata_path(location, v + 1)):
+            v += 1  # published, but the hint update never happened
         with open(metadata_path(location, v)) as f:
             meta = TableMetadata.from_json(f.read())
         meta.version = v
@@ -296,29 +303,11 @@ class CasCatalogBackend:
         return meta
 
 
-_BACKEND: FileCommitBackend | CasCatalogBackend = FileCommitBackend()
-
-
-def commit_backend():
-    return _BACKEND
-
-
-def set_commit_backend(backend) -> None:
-    """Swap the commit backend (None restores the POSIX default)."""
-    global _BACKEND
-    _BACKEND = backend if backend is not None else FileCommitBackend()
-
-
-def try_write_metadata(location: str, meta: TableMetadata) -> bool:
-    """Atomic commit attempt via the active backend. Returns False if
-    another writer won version N (optimistic-concurrency loser — the
-    caller refreshes and retries)."""
-    return _BACKEND.try_commit(location, meta)
-
-
-def read_current_metadata(location: str) -> TableMetadata:
-    """Resolve the current table metadata via the active backend."""
-    return _BACKEND.read_current(location)
+def try_write_metadata(backend, location: str, meta: TableMetadata) -> bool:
+    """Atomic commit attempt via ``backend``. Returns False if another
+    writer won version N (optimistic-concurrency loser — the caller
+    refreshes and retries)."""
+    return backend.try_commit(location, meta)
 
 
 def write_manifest(location: str, entries: list[DataFileEntry]) -> str:

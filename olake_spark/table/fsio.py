@@ -12,10 +12,10 @@ implementations behind the same interface). Per-file metadata work
 (footer harvest, MERGE bloom probe, ``build_blooms``) fans out through
 the one ``map_files``.
 
-The commit protocol is abstracted separately: commit atomicity is a
-pluggable backend (table/format.FileCommitBackend — POSIX ``O_EXCL``
-default — vs CasCatalogBackend, the catalog-CAS shape object stores
-need) — see README "Deployment surfaces".
+The commit protocol is abstracted separately: each table owns a commit
+backend (table/format.FileCommitBackend — POSIX hard-link publish,
+the default — or CasCatalogBackend, the catalog-CAS shape object
+stores need) — see README "Deployment surfaces".
 """
 
 from __future__ import annotations

@@ -1,7 +1,8 @@
 """Table: create/load, snapshot-isolated scans, atomic commits.
 
-The commit protocol is optimistic concurrency over metadata versions
-(format.try_write_metadata): losers refresh, validate, and retry with
+The commit protocol is optimistic concurrency over metadata versions:
+every metadata change goes through ``Table._commit_meta`` and the
+table's own commit backend; losers refresh, re-derive, and retry with
 backoff — the Spark-native analog of the reference's Iceberg
 RowDelta/AppendFiles commits (IcebergTableOperator.java:116-169) and
 its retry policy (drivers/abstract/utils.go:11-32, 3 attempts).
@@ -17,6 +18,7 @@ arrow-writer/utils.go:22).
 
 from __future__ import annotations
 
+import dataclasses
 import glob
 import json
 import os
@@ -66,9 +68,13 @@ class CommitConflict(Exception):
 
 
 class Table:
-    def __init__(self, spark: SparkSession, meta: TableMetadata):
+    """Current metadata plus the commit backend this table commits
+    through (default ``FileCommitBackend``)."""
+
+    def __init__(self, spark: SparkSession, meta: TableMetadata, backend=None):
         self.spark = spark
         self.meta = meta
+        self.backend = backend or fmt.FileCommitBackend()
 
     # ------------------------------------------------------------ lifecycle
 
@@ -81,6 +87,7 @@ class Table:
         identifier_fields: list[str] | None = None,
         partition_spec: list[dict] | None = None,
         properties: dict | None = None,
+        backend=None,
     ) -> "Table":
         if isinstance(schema, str):
             schema = T.StructType.fromDDL(schema)
@@ -104,19 +111,21 @@ class Table:
             last_sequence_number=0,
             version=1,
         )
-        if not fmt.try_write_metadata(location, meta):
+        t = Table(spark, meta, backend)
+        if not fmt.try_write_metadata(t.backend, location, meta):
             raise CommitConflict(f"table already exists at {location}")
-        return Table(spark, meta)
+        return t
 
     @staticmethod
-    def load(spark: SparkSession, location: str) -> "Table":
+    def load(spark: SparkSession, location: str, backend=None) -> "Table":
         location = os.path.abspath(location)
-        meta = fmt.read_current_metadata(location)
+        backend = backend or fmt.FileCommitBackend()
+        meta = backend.read_current(location)
         meta.location = location  # actual path wins if the dir moved
-        return Table(spark, meta)
+        return Table(spark, meta, backend)
 
     def refresh(self) -> "Table":
-        self.meta = Table.load(self.spark, self.meta.location).meta
+        self.meta = Table.load(self.spark, self.meta.location, self.backend).meta
         return self
 
     # ------------------------------------------------------------ accessors
@@ -575,6 +584,27 @@ class Table:
             summary=summary,
         )
 
+    def _commit_meta(self, change, what: str) -> TableMetadata | None:
+        """The one optimistic commit loop. Each attempt asks
+        ``change(self)`` for the metadata fields to replace, derived
+        from the current ``self.meta`` (it may raise CommitConflict, or
+        return None: nothing left to commit), and writes the next
+        version through the table's backend. A loser backs off,
+        refreshes and asks again; ``COMMIT_RETRIES + 1`` losses raise."""
+        for attempt in range(COMMIT_RETRIES + 1):
+            fields = change(self)
+            if fields is None:
+                return None
+            new_meta = dataclasses.replace(self.meta, version=self.meta.version + 1, **fields)
+            if fmt.try_write_metadata(self.backend, self.location, new_meta):
+                self.meta = new_meta
+                return new_meta
+            time.sleep(COMMIT_BACKOFF_S * (2**attempt))
+            self.refresh()
+        raise CommitConflict(
+            f"{what} lost version {new_meta.version} after {COMMIT_RETRIES + 1} attempts"
+        )
+
     def _commit(
         self,
         build_snapshot,
@@ -582,44 +612,28 @@ class Table:
         schema_json: str | None = None,
         properties: dict | None = None,
     ) -> Snapshot:
-        """Optimistic commit loop: build against current meta, attempt
-        version write, on loss refresh + re-validate + rebuild.
-        ``schema_json`` swaps the table schema in the SAME metadata
-        version as the snapshot — a refresh-level evolve rewrites data
-        files and flips the schema atomically (no window where readers
-        see new files under the old schema). ``properties`` entries are
-        merged over the current table properties in the same version
-        (operator state riding the snapshot commit, e.g. clustering
-        curve params)."""
-        last_err: Exception | None = None
-        for attempt in range(COMMIT_RETRIES + 1):
+        """Snapshot commit: validate and build against the current
+        meta on every attempt. ``schema_json`` swaps the table schema
+        in the SAME metadata version as the snapshot — a refresh-level
+        evolve rewrites data files and flips the schema atomically (no
+        window where readers see new files under the old schema).
+        ``properties`` entries are merged over the current table
+        properties in the same version (operator state riding the
+        snapshot commit, e.g. clustering curve params)."""
+
+        def change(t: "Table") -> dict:
             if validate is not None:
-                validate(self)
-            snap = build_snapshot(self)
-            new_meta = TableMetadata(
-                table_uuid=self.meta.table_uuid,
-                name=self.meta.name,
-                location=self.meta.location,
-                schema_json=schema_json or self.meta.schema_json,
-                identifier_fields=self.meta.identifier_fields,
-                partition_spec=self.meta.partition_spec,
-                properties=(
-                    {**self.meta.properties, **properties}
-                    if properties
-                    else self.meta.properties
-                ),
-                current_snapshot_id=snap.snapshot_id,
-                snapshots=self.meta.snapshots + [snap],
-                last_sequence_number=snap.sequence_number,
-                version=self.meta.version + 1,
-            )
-            if fmt.try_write_metadata(self.location, new_meta):
-                self.meta = new_meta
-                return snap
-            last_err = CommitConflict(f"lost version {new_meta.version}")
-            time.sleep(COMMIT_BACKOFF_S * (2**attempt))
-            self.refresh()
-        raise last_err  # type: ignore[misc]
+                validate(t)
+            snap = build_snapshot(t)
+            return {
+                "schema_json": schema_json or t.meta.schema_json,
+                "properties": {**t.meta.properties, **(properties or {})},
+                "current_snapshot_id": snap.snapshot_id,
+                "snapshots": t.meta.snapshots + [snap],
+                "last_sequence_number": snap.sequence_number,
+            }
+
+        return self._commit_meta(change, "snapshot commit").snapshots[-1]
 
     def commit_append(self, added: list[DataFileEntry], summary: dict | None = None) -> Snapshot:
         def build(t: "Table") -> Snapshot:
@@ -658,7 +672,7 @@ class Table:
         attempt against refreshed metadata (e.g. compaction refusing
         delete files that landed after its fold); raise CommitConflict
         to reject. A concurrent commit landing between validation and
-        the version write makes the write LOSE (O_EXCL versioning), so
+        the version write makes the write LOSE (create-or-fail versioning), so
         the re-validation after refresh sees it — no unchecked window.
         """
 
@@ -709,40 +723,27 @@ class Table:
         writer's column — a lost update).
 
         ``rebuild(current_schema) -> new_schema`` recomputes the
-        change per attempt (evolve passes its diff re-application);
-        without it, retries union-by-name merge the requested schema
-        onto the refreshed one (requested types win per column,
+        change per attempt (evolve passes its diff re-application).
+        Without it, ``new_schema`` applies as given while the table is
+        still at the version it was requested against; once another
+        writer has moved it, the requested schema is union-by-name
+        merged onto the refreshed one (requested types win per column,
         columns unique to either side survive)."""
-        requested = new_schema
-        for attempt in range(COMMIT_RETRIES + 1):
-            current = self.schema
+        base_version = self.meta.version
+
+        def change(t: "Table") -> dict:
+            current = t.schema
             if rebuild is not None:
                 target = rebuild(current)
-            elif attempt == 0:
-                target = requested
+            elif t.meta.version == base_version:
+                target = new_schema
             else:
-                want = {f.name: f for f in requested.fields}
+                want = {f.name: f for f in new_schema.fields}
                 merged = [want.pop(f.name, f) for f in current.fields]
                 target = T.StructType(merged + list(want.values()))
-            new_meta = TableMetadata(
-                table_uuid=self.meta.table_uuid,
-                name=self.meta.name,
-                location=self.meta.location,
-                schema_json=target.json(),
-                identifier_fields=self.meta.identifier_fields,
-                partition_spec=self.meta.partition_spec,
-                properties=self.meta.properties,
-                current_snapshot_id=self.meta.current_snapshot_id,
-                snapshots=self.meta.snapshots,
-                last_sequence_number=self.meta.last_sequence_number,
-                version=self.meta.version + 1,
-            )
-            if fmt.try_write_metadata(self.location, new_meta):
-                self.meta = new_meta
-                return
-            time.sleep(COMMIT_BACKOFF_S * (2**attempt))
-            self.refresh()
-        raise CommitConflict("schema update lost all retries")
+            return {"schema_json": target.json()}
+
+        self._commit_meta(change, "schema update")
 
     def update_properties(self, props: dict) -> None:
         """Metadata-only property commit (no new snapshot): merge
@@ -750,28 +751,12 @@ class Table:
         removes the key. Optimistic like every commit: a loser
         refreshes and re-merges over the winner's properties, so two
         concurrent single-key updates both land (no lost update)."""
-        for attempt in range(COMMIT_RETRIES + 1):
-            merged = {**self.meta.properties, **props}
-            merged = {k: v for k, v in merged.items() if v is not None}
-            new_meta = TableMetadata(
-                table_uuid=self.meta.table_uuid,
-                name=self.meta.name,
-                location=self.meta.location,
-                schema_json=self.meta.schema_json,
-                identifier_fields=self.meta.identifier_fields,
-                partition_spec=self.meta.partition_spec,
-                properties=merged,
-                current_snapshot_id=self.meta.current_snapshot_id,
-                snapshots=self.meta.snapshots,
-                last_sequence_number=self.meta.last_sequence_number,
-                version=self.meta.version + 1,
-            )
-            if fmt.try_write_metadata(self.location, new_meta):
-                self.meta = new_meta
-                return
-            time.sleep(COMMIT_BACKOFF_S * (2**attempt))
-            self.refresh()
-        raise CommitConflict("property update lost all retries")
+
+        def change(t: "Table") -> dict:
+            merged = {**t.meta.properties, **props}
+            return {"properties": {k: v for k, v in merged.items() if v is not None}}
+
+        self._commit_meta(change, "property update")
 
     def commit_rewrite_manifests(self, new_manifests: list[str], summary: dict | None = None) -> Snapshot:
         """Metadata-only snapshot: same data files, new manifest layout."""

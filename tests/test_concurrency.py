@@ -1,6 +1,6 @@
 """Cross-process commit races + driver-side planner scale.
 
-The commit protocol must hold across PROCESSES (O_EXCL create of the
+The commit protocol must hold across PROCESSES (create-or-fail of the
 next metadata version), not just threads — two maintenance jobs
 hitting one table is the real deployment hazard the reference guards
 with catalog-side atomic commits (IcebergTableOperator.java:116-169).

@@ -11,7 +11,7 @@ then reports, per pipeline stage:
   idle      — wall - busy/N: time cores sat idle (driver work, job
               scheduling gaps, skewed tails) — the scaling killer
 plus cumulative driver-side seconds inside monkeypatched hot spots
-(stats harvest, snapshot commits, toPandas collects, parquet writes).
+(stats harvest, metadata commits, toPandas collects, parquet writes).
 """
 
 from __future__ import annotations
@@ -73,8 +73,7 @@ def main():
     from olake_spark.table.table import Table
 
     _wrap_attr(stats, "harvest", "stats.harvest")
-    _wrap_attr(Table, "commit_append", "commit_append")
-    _wrap_attr(Table, "commit_replace", "commit_replace")
+    _wrap_attr(Table, "_commit_meta", "commit")
     _wrap_attr(Table, "entries", "table.entries")
     _wrap_attr(_dfmod.DataFrame, "toPandas", "toPandas")
 
