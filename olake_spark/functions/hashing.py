@@ -15,6 +15,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
@@ -73,31 +74,55 @@ def mmh3_32_long(v, seed: int = 0) -> np.ndarray:
         return _finalize(h, 8).view(np.int32)
 
 
-def mmh3_32_bytes(values: "pd.Series | list[bytes]", seed: int = 0) -> np.ndarray:
-    """murmur3_x86_32 over variable-length byte strings, lane-parallel.
+def pack_binary(values) -> tuple[np.ndarray, np.ndarray]:
+    """Byte strings → ``(buf, lens)``: a zero-padded ``(n, width)``
+    uint8 matrix (``width`` a multiple of 4, at least 4) and each row's
+    length. ``values`` is a list of bytes or a null-free Arrow
+    binary/large_binary array; a list goes through ``pa.array`` (one C
+    call). The matrix is filled from the array's offsets and data
+    buffers in one masked assignment, with no per-row Python."""
+    arr = values if isinstance(values, (pa.Array, pa.ChunkedArray)) else pa.array(values, pa.binary())
+    if isinstance(arr, pa.ChunkedArray):
+        arr = arr.combine_chunks()
+    n = len(arr)
+    if n == 0:
+        return np.zeros((0, 4), dtype=np.uint8), np.zeros(0, dtype=np.int64)
+    _, obuf, dbuf = arr.buffers()
+    otype = np.int64 if pa.types.is_large_binary(arr.type) else np.int32
+    offsets = np.frombuffer(obuf, dtype=otype)[arr.offset : arr.offset + n + 1].astype(np.int64)
+    lens = np.diff(offsets)
+    width = max(4, ((int(lens.max()) + 3) // 4) * 4)
+    buf = np.zeros((n, width), dtype=np.uint8)
+    if offsets[-1] > offsets[0]:
+        # row-major order of the mask's True cells == the data buffer's byte order
+        buf[np.arange(width) < lens[:, None]] = np.frombuffer(dbuf, dtype=np.uint8)[offsets[0] : offsets[-1]]
+    return buf, lens
 
-    All rows of a batch advance through block index j together; rows
-    whose payload is shorter are masked out. The per-block work is pure
-    numpy — cost is O(max_len/4) vectorized passes per batch.
-    """
+
+def mmh3_32_bytes(values: "pd.Series | list[bytes]", seed: int = 0) -> np.ndarray:
+    """murmur3_x86_32 over variable-length byte strings, lane-parallel
+    (``values`` as ``pack_binary`` takes them, or a Series of bytes)."""
     if isinstance(values, pd.Series):
         values = values.tolist()
-    n = len(values)
+    return mmh3_32_packed(*pack_binary(values), seed=seed)
+
+
+def mmh3_32_packed(buf: np.ndarray, lens: np.ndarray, seed: int = 0) -> np.ndarray:
+    """murmur3_x86_32 of the rows of a ``pack_binary`` matrix.
+
+    All rows advance through block index j together; rows whose
+    payload is shorter are masked out. The per-block work is pure
+    numpy — cost is O(max_len/4) vectorized passes per batch.
+    """
+    n = len(lens)
     if n == 0:
         return np.empty(0, dtype=np.int32)
-    lens = np.fromiter((len(b) for b in values), dtype=np.int64, count=n)
-    maxlen = int(lens.max()) if n else 0
-    # pack into a padded (n, ceil(maxlen/4)*4) uint8 matrix
-    width = max(4, ((maxlen + 3) // 4) * 4)
-    buf = np.zeros((n, width), dtype=np.uint8)
-    for i, b in enumerate(values):  # driver/executor-side packing loop (memcpy per row)
-        if b:
-            buf[i, : len(b)] = np.frombuffer(b, dtype=np.uint8)
+    width = buf.shape[1]
     blocks = buf.view(np.uint32).reshape(n, width // 4)  # little-endian lanes
     nblocks = lens // 4
     with np.errstate(over="ignore"):
         h = np.full(n, seed, dtype=np.uint32)
-        for j in range(int(nblocks.max()) if n else 0):
+        for j in range(int(nblocks.max())):
             active = nblocks > j
             hj = _mix_block(h[active], blocks[active, j])
             h[active] = hj

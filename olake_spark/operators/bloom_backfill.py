@@ -50,7 +50,7 @@ def _build_one(abs_path: str, shared: tuple[str, float]) -> str:
             pf.schema_arrow.field(col).type
         ):
             return "unsupported"
-        values = pf.read(columns=[col]).column(0).to_pylist()
+        values = pf.read(columns=[col]).column(0)
     finally:
         pf.close()
     payload = bloom_mod.build(col, values, fpp)

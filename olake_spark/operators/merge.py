@@ -466,13 +466,19 @@ def merge_mor(
     """
     if lineage is not None and lineage.stage_complete(stage):
         return {"skipped": True, "snapshot_id": lineage.stage_snapshot(stage)}
-    id_key = (table.meta.identifier_fields or [key])[0]
-    if key != id_key:
-        # the scan-side anti-join resolves deletes on the table's
-        # identifier fields — a delete file keyed differently would be
-        # silently ignored at read time
+    # the scan-side anti-join resolves deletes on ALL the table's
+    # identifier fields, and a delete file here holds only ``key`` — a
+    # delete keyed differently, or on part of a composite identifier,
+    # would be silently ignored at read time
+    id_fields = table.meta.identifier_fields or [key]
+    if len(id_fields) > 1:
         raise ValueError(
-            f"merge_mor key {key!r} must be the table identifier field {id_key!r}"
+            f"merge_mor needs a single identifier field; the table has {id_fields} "
+            "and its delete files would hold only one of them"
+        )
+    if key != id_fields[0]:
+        raise ValueError(
+            f"merge_mor key {key!r} must be the table identifier field {id_fields[0]!r}"
         )
 
     # upsert = delete old version + insert new: EVERY source key goes in

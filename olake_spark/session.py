@@ -87,6 +87,8 @@ def local_df(spark: SparkSession, rows, schema: str | T.StructType) -> DataFrame
     Python worker. An Arrow table instead becomes a ``LocalRelation``
     with exact stats, broadcast straight from the driver. Column types
     follow ``schema`` exactly (an ``int`` column stays ``int``).
+    ``rows`` is a list of tuples, or a ``pyarrow.Table`` whose columns
+    are already in ``schema``'s order (renamed and cast to it here).
     """
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
@@ -94,6 +96,8 @@ def local_df(spark: SparkSession, rows, schema: str | T.StructType) -> DataFrame
     if isinstance(schema, str):
         schema = T.StructType.fromDDL(schema)
     arrow_schema = to_arrow_schema(schema)
+    if isinstance(rows, pa.Table):
+        return spark.createDataFrame(rows.rename_columns(schema.names).cast(arrow_schema), schema)
     cols = list(zip(*rows)) if rows else [[] for _ in schema.fields]
     table = pa.Table.from_arrays(
         [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema)], schema=arrow_schema

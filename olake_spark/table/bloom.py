@@ -50,8 +50,10 @@ from __future__ import annotations
 import json
 
 import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 
-from olake_spark.functions.hashing import mmh3_32_bytes
+from olake_spark.functions.hashing import mmh3_32_packed, pack_binary
 from olake_spark.table.fsio import fs_for, map_files
 
 MAGIC = b"OLBF1\n"
@@ -106,10 +108,24 @@ def key_bytes(values) -> list[bytes]:
     return out
 
 
+def key_array(values) -> pa.Array:
+    """Canonical keys (``key_bytes``) as one Arrow binary array, nulls
+    dropped. An Arrow string, binary or integer column converts without
+    a per-row Python loop: integers go through ``pc.cast(..., string)``,
+    the same decimal digits as ``str(int(v))``."""
+    if not isinstance(values, (pa.Array, pa.ChunkedArray)):
+        return pa.array(key_bytes(values), pa.binary())
+    arr = pc.drop_null(values)
+    if isinstance(arr, pa.ChunkedArray):
+        arr = arr.combine_chunks()
+    if pa.types.is_integer(arr.type):
+        arr = pc.cast(arr, pa.string())
+    large = pa.types.is_large_string(arr.type) or pa.types.is_large_binary(arr.type)
+    return arr.cast(pa.large_binary() if large else pa.binary())
+
+
 def buildable(pa_type) -> bool:
     """Only types with an unambiguous canonical byte form get blooms."""
-    import pyarrow as pa
-
     return (
         pa.types.is_string(pa_type)
         or pa.types.is_large_string(pa_type)
@@ -119,10 +135,19 @@ def buildable(pa_type) -> bool:
     )
 
 
-def digests(encoded: list[bytes]) -> tuple[np.ndarray, np.ndarray]:
-    """Two independent 32-bit murmur lanes as uint64 (h2 forced odd)."""
-    h1 = mmh3_32_bytes(encoded, seed=_SEED1).view(np.uint32).astype(np.uint64)
-    h2 = mmh3_32_bytes(encoded, seed=_SEED2).view(np.uint32).astype(np.uint64)
+def probeable(value) -> bool:
+    """A probe value whose ``key_bytes`` form is the one a buildable
+    column of its type was built with (no floats, no bools)."""
+    return isinstance(value, (str, bytes, int, np.integer)) and not isinstance(value, bool)
+
+
+def digests(keys) -> tuple[np.ndarray, np.ndarray]:
+    """Two independent 32-bit murmur lanes as uint64 (h2 forced odd)
+    over canonical keys (a ``key_bytes`` list or a ``key_array``),
+    packed once and hashed at both seeds from that one matrix."""
+    buf, lens = pack_binary(keys)
+    h1 = mmh3_32_packed(buf, lens, seed=_SEED1).view(np.uint32).astype(np.uint64)
+    h2 = mmh3_32_packed(buf, lens, seed=_SEED2).view(np.uint32).astype(np.uint64)
     return h1, h2 | np.uint64(1)
 
 
@@ -134,10 +159,11 @@ def _bit_positions(h1: np.ndarray, h2: np.ndarray, m: int, k: int) -> np.ndarray
 
 
 def build(col: str, values, fpp: float = 0.01) -> bytes | None:
-    """Serialize a sidecar payload for the column's values, or None if
-    the file is too large to bloom economically."""
-    encoded = key_bytes(values)
-    n = len(encoded)
+    """Serialize a sidecar payload for the column's values (a list, or
+    an Arrow column as read from the file), or None if the file is too
+    large to bloom economically."""
+    keys = key_array(values)
+    n = len(keys)
     m = n_bits(n, fpp)
     if m > MAX_BITS:
         return None
@@ -146,7 +172,7 @@ def build(col: str, values, fpp: float = 0.01) -> bytes | None:
     if n:
         # chunked so the (n, k) index matrix stays cache-sized
         for lo in range(0, n, 1 << 16):
-            h1, h2 = digests(encoded[lo : lo + (1 << 16)])
+            h1, h2 = digests(keys.slice(lo, 1 << 16))
             idx = _bit_positions(h1, h2, m, k).ravel()
             np.bitwise_or.at(bits, idx >> np.uint64(3), np.uint8(1) << (idx & np.uint64(7)).astype(np.uint8))
     return serialize(col, m, k, n, bits)

@@ -77,7 +77,7 @@ def file_entry(
     if bloom_col is not None and bloom_col in schema_names:
         ftype = pf.schema_arrow.field(bloom_col).type
         if bloom_mod.buildable(ftype):
-            values = pf.read(columns=[bloom_col]).column(0).to_pylist()
+            values = pf.read(columns=[bloom_col]).column(0)
             payload = bloom_mod.build(bloom_col, values, bloom_fpp)
             if payload is not None:
                 bloom_mod.write_sidecar(fs_path, payload, fs=fs)

@@ -8,9 +8,11 @@ from __future__ import annotations
 import os
 
 import numpy as np
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
+from olake_spark.functions.hashing import mmh3_32_packed, pack_binary
 from olake_spark.fixtures.audio_clips import FULL_SCHEMA, cdc_batch, generate_clips
 from olake_spark.operators.compaction import compact
 from olake_spark.operators.expire import expire_snapshots
@@ -117,6 +119,36 @@ class TestBloomCore:
         assert B.file_might_contain(path, "_olake_id", *_digest_one("x")) is True
         assert B.or_merge([payload, torn]) is None
 
+    ARROW_CASES = {
+        # empty string, multi-byte UTF-8, 1-3 byte tails, one 37-byte key
+        "string": (pa.string(), ["", "a", "ab", "abc", "abcd", "héllo", "日本語", "x" * 37, None]),
+        "binary": (pa.binary(), [b"", b"\x00", b"\xff\xfe", b"abc", b"abcde", None, b"k" * 9]),
+        "int": (pa.int64(), [0, 7, -1, 123, 2**40, -(2**40), None, 10**15]),
+        "large_string": (pa.large_string(), ["", "é", "key-00001", None]),
+    }
+
+    @pytest.mark.parametrize("case", sorted(ARROW_CASES))
+    def test_arrow_column_matches_list_path(self, case):
+        """The harvest hands ``build`` the Arrow column; digests and
+        sidecar bytes must equal the per-value list path's, and the
+        buffer packing must equal packing each key on its own."""
+        typ, values = self.ARROW_CASES[case]
+        col = pa.chunked_array([pa.array(values[:3], typ), pa.array(values[3:], typ)])
+        listed = B.key_bytes(values)
+        for got, want in zip(B.digests(B.key_array(col)), B.digests(listed)):
+            assert np.array_equal(got, want)
+        assert B.build("k", col, 0.01) == B.build("k", values, 0.01)
+        width = max(4, -(-max(len(k) for k in listed) // 4) * 4)
+        naive = np.zeros((len(listed), width), dtype=np.uint8)
+        for i, k in enumerate(listed):
+            naive[i, : len(k)] = np.frombuffer(k, dtype=np.uint8)
+        lens = np.array([len(k) for k in listed])
+        want = mmh3_32_packed(naive, lens, seed=7)
+        assert np.array_equal(mmh3_32_packed(*pack_binary(B.key_array(col)), seed=7), want)
+        # a sliced array packs from its own offsets
+        sliced = B.key_array(col).slice(1)
+        assert np.array_equal(B.digests(sliced)[0], B.digests(listed[1:])[0])
+
 
 BASE_N = 120
 
@@ -164,6 +196,49 @@ class TestBloomTableIntegration:
         }
         assert set(affected) >= truly
         assert len(affected) < len(entries)
+
+    def test_lookup_pruning_keeps_every_holder(self, spark, bloom_table):
+        """A point lookup on the bloom column never drops the file that
+        holds the key — checked for every key — and, where the bounds
+        keep every file, narrows lookups overall."""
+        t = bloom_table
+        entries = t.data_entries()
+        rel = {t.abs_entry_path(e): e.path for e in entries}
+        holder = {
+            r["_olake_id"]: rel[r["__file"]]
+            for r in t.scan(file_col="__file").select("_olake_id", "__file").collect()
+        }
+        assert len(holder) == BASE_N
+        kept_total = 0
+        for key, path in holder.items():
+            kept = {e.path for e in t.pruned_entries("_olake_id", key, key)}
+            assert path in kept, key
+            kept_total += len(kept)
+        assert kept_total < len(entries) * len(holder)
+
+    def test_lookup_pruning_is_conservative_and_point_only(
+        self, spark, bloom_table, monkeypatch
+    ):
+        t = bloom_table
+        entries = t.data_entries()
+        torn, missing = entries[0], entries[1]
+        with open(t.abs_entry_path(torn) + B.SIDECAR_SUFFIX, "wb") as f:
+            f.write(B.MAGIC + b'{"col": ')
+        os.remove(t.abs_entry_path(missing) + B.SIDECAR_SUFFIX)
+        for key in ("absent-key", t.scan().first()["_olake_id"]):
+            kept = {e.path for e in t.pruned_entries("_olake_id", key, key)}
+            assert {torn.path, missing.path} <= kept, key
+        # ranges and other columns keep the bounds-only answer, unprobed
+        monkeypatch.setattr(B, "probe_files", lambda *a: pytest.fail("probed"))
+        for col, lo, hi in (("_olake_id", "3", "9"), ("_olake_id", None, "8"), ("dur_ms", 100, 100)):
+            want = [
+                e for e in t.entries()
+                if e.lower_bounds.get(col) is None
+                or e.upper_bounds.get(col) is None
+                or not ((hi is not None and e.lower_bounds[col] > hi)
+                        or (lo is not None and e.upper_bounds[col] < lo))
+            ]
+            assert t.pruned_entries(col, lo, hi) == want
 
     def test_merge_correct_after_pruning(self, spark, bloom_table):
         t = bloom_table

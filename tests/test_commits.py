@@ -13,6 +13,8 @@ from __future__ import annotations
 
 import glob
 import os
+import time
+import types
 
 import pytest
 from pyspark.sql import functions as F
@@ -223,6 +225,28 @@ class TestBoundedRetry:
         assert backend.attempts == COMMIT_RETRIES + 1
         assert Table.load(spark, loc).meta.version == 4
         assert all(os.path.exists(os.path.join(loc, e.path)) for e in files.values())
+
+    @pytest.mark.parametrize("op", sorted(_OPS))
+    def test_last_lost_attempt_raises_without_waiting(
+        self, spark, tmp_path, monkeypatch, op
+    ):
+        """Backoff and refresh come only BETWEEN attempts: the final
+        loss raises at once instead of sleeping for a retry that never
+        comes."""
+        loc = str(tmp_path / "tbl")
+        _, files = _setup_history(spark, loc)
+        t = Table.load(spark, loc, backend=LosingBackend(losses=10**6))
+        sleeps, refreshes = [], []
+        monkeypatch.setattr(
+            table_mod, "time", types.SimpleNamespace(time=time.time, sleep=sleeps.append)
+        )
+        real_refresh = Table.refresh
+        monkeypatch.setattr(
+            Table, "refresh", lambda self: refreshes.append(1) or real_refresh(self)
+        )
+        with pytest.raises(CommitConflict):
+            _OPS[op](t, files)
+        assert len(sleeps) == len(refreshes) == COMMIT_RETRIES
 
     @pytest.mark.parametrize("op", sorted(_OPS))
     def test_losing_once_commits_on_retry(self, spark, tmp_path, no_backoff, op):

@@ -15,14 +15,21 @@ contracts the judge graded missing in round 1:
 
 from __future__ import annotations
 
+import glob
+import os
 import re
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from olake_spark.fixtures.audio_clips import FULL_SCHEMA, cdc_batch, generate_clips
 from olake_spark.operators.merge import fold_deletes, merge_into, merge_mor
 from olake_spark.table import Table
+from olake_spark.table import bloom as bloom_mod
+from olake_spark.table import evolution as ev
+from olake_spark.table import table as table_mod
+from olake_spark.table.table import BLOOM_COL_PROP
 
 BASE_N = 120
 
@@ -63,6 +70,23 @@ def test_mor_matches_cow_over_batches(spark, tmp_path):
     # MoR accumulated delete files; CoW never has any
     assert len(mor.delete_entries()) == 2
     assert len(cow.delete_entries()) == 0
+
+
+def test_merge_mor_rejects_composite_identifier(spark, tmp_path):
+    """A delete file holds one key column, so on a composite identifier
+    the anti-join could never match and the old row would survive next
+    to the new one: refuse before writing anything."""
+    t = Table.create(
+        spark, str(tmp_path / "t"), "audio_clips", FULL_SCHEMA,
+        identifier_fields=["_olake_id", "clip_id"],
+    )
+    t.commit_append(t.write_datafiles(generate_clips(spark, BASE_N, partitions=2)))
+    n_snaps = len(t.meta.snapshots)
+    files = sorted(glob.glob(os.path.join(t.location, "data", "**"), recursive=True))
+    with pytest.raises(ValueError, match="single identifier field"):
+        merge_mor(t, cdc_batch(spark, BASE_N, 1, updates=2))
+    assert len(Table.load(spark, t.location).meta.snapshots) == n_snaps
+    assert sorted(glob.glob(os.path.join(t.location, "data", "**"), recursive=True)) == files
 
 
 def test_mor_writes_o_batch_bytes(spark, tmp_path):
@@ -176,7 +200,6 @@ def test_fold_after_fanout_rewrite_keeps_scan_exact(spark, tmp_path):
     merge_mor(t, cdc_batch(spark, BASE_N, 2, deletes=4))
     fold_deletes(t)
     # the fold rewrote files via partitionBy fanout: basenames collide
-    import os
     bases = [os.path.basename(e.path) for e in t.data_entries()]
     assert len(set(bases)) < len(bases), "fixture no longer exercises collisions"
     assert t.scan().count() == BASE_N - 4
@@ -255,19 +278,164 @@ def _final_plan(df):
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+def _assert_broadcast_anti_join(plan):
+    assert re.search(r"BroadcastHashJoin .*LeftAnti", plan), plan
+    assert "SortMergeJoin" not in plan, plan
+    assert "Scan ExistingRDD" not in plan, plan
+    assert not re.search(r"(?<!Broadcast)Exchange", plan), plan
+
+
 def test_mor_scan_broadcasts_small_delete_side(spark, tmp_path):
-    """The file→sequence maps are LocalRelations with exact stats, so
-    the planner sees the delete side is small and broadcasts it: no
-    sort-merge anti-join, no shuffle, no Python-RDD scan."""
+    """The delete side and the file→sequence map are LocalRelations
+    with exact stats, so the planner sees the delete side is small and
+    broadcasts it: no sort-merge anti-join, no shuffle, no Python-RDD
+    scan."""
     mor, cow = _mor_and_cow(spark, tmp_path)
-    key = mor.scan().select("_olake_id").orderBy("_olake_id").first()[0]
-    for df in (mor.scan(), mor.scan().filter(F.col("_olake_id") == key)):
-        plan = _final_plan(df)
-        assert re.search(r"BroadcastHashJoin .*LeftAnti", plan), plan
-        assert "SortMergeJoin" not in plan, plan
-        assert "Scan ExistingRDD" not in plan, plan
-        assert not re.search(r"(?<!Broadcast)Exchange", plan), plan
+    _assert_broadcast_anti_join(_final_plan(mor.scan()))
     assert _rows(mor.scan()) == _rows(cow.scan())
+
+
+@pytest.fixture()
+def bloom_mor(spark, tmp_path):
+    """A bloom-sidecar table after the two CDC batches, with a key no
+    batch touched and a key the batches deleted."""
+    t = Table.create(
+        spark, str(tmp_path / "t"), "audio_clips", FULL_SCHEMA,
+        identifier_fields=["_olake_id"], properties={BLOOM_COL_PROP: "_olake_id"},
+    )
+    t.commit_append(t.write_datafiles(generate_clips(spark, BASE_N, partitions=4)))
+    batches = [
+        cdc_batch(spark, BASE_N, 1, updates=10, deletes=5, inserts=3, dup_keys=2),
+        cdc_batch(spark, BASE_N, 2, updates=6, deletes=2, inserts=2),
+    ]
+    for b in batches:
+        merge_mor(t, b)
+    touched = {r[0] for b in batches for r in b.select("_olake_id").collect()}
+    base = {r[0] for r in t.scan(snapshot_id=1).select("_olake_id").collect()}
+    live = {r[0] for r in t.scan().select("_olake_id").collect()}
+    return t, min(base - touched), min(base - live)
+
+
+def _lookup(t, key):
+    return t.scan(entries=t.pruned_entries("_olake_id", key, key)).where(
+        F.col("_olake_id") == key
+    )
+
+
+def _spark_jobs(spark, df) -> int:
+    """Spark jobs one ``collect`` of ``df`` runs (after a warm-up)."""
+    sc = spark.sparkContext
+    df.collect()
+    sc.setJobGroup("olake-job-count", "count one collect")
+    try:
+        df.collect()
+        return len(sc.statusTracker().getJobIdsForGroup("olake-job-count"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+
+def test_mor_lookup_of_untouched_key_has_no_anti_join(spark, bloom_mor):
+    """Catalyst pushes the lookup's ``key = k`` into the LocalRelation
+    delete side; k was never deleted, so that side folds to empty and
+    the anti-join disappears: one Spark job, the delete-free cost."""
+    t, untouched, _ = bloom_mor
+    df = _lookup(t, untouched)
+    plan = _final_plan(df)
+    assert "LeftAnti" not in plan, plan
+    assert _spark_jobs(spark, df) == 1
+    assert [r["_olake_id"] for r in df.collect()] == [untouched]
+
+
+def test_mor_lookup_of_deleted_key_keeps_broadcast_anti_join(spark, bloom_mor):
+    t, _, deleted = bloom_mor
+    df = _lookup(t, deleted)
+    _assert_broadcast_anti_join(_final_plan(df))
+    assert df.collect() == []
+
+
+def test_mor_scan_of_file_without_newer_deletes_has_no_anti_join(spark, bloom_mor):
+    """Only deletes newer than the oldest selected data file apply: the
+    last batch's data file has none, so its scan is a plain read."""
+    t, _, _ = bloom_mor
+    newest = max(t.data_entries(), key=lambda e: e.added_snapshot_id)
+    assert any(d.added_snapshot_id == newest.added_snapshot_id for d in t.delete_entries())
+    df = t.scan(entries=[newest])
+    assert "LeftAnti" not in _final_plan(df)
+    assert _rows(df) == _rows(t.scan(entries=[newest], apply_deletes=False))
+
+
+def test_mor_scan_keeps_null_key_rows(spark, tmp_path, monkeypatch):
+    """A data row with a NULL key matches no equality delete, on the
+    driver-built delete side and on the Spark-read one alike."""
+    t = _mk_table(spark, str(tmp_path / "t"))
+    orphan = generate_clips(spark, 1).withColumn("_olake_id", F.lit(None).cast("string"))
+    t.commit_append(t.write_datafiles(orphan))
+    merge_mor(t, cdc_batch(spark, BASE_N, 1, updates=4, deletes=3))
+    for cap in (table_mod.DRIVER_DELETE_KEY_CAP, 0):
+        monkeypatch.setattr(table_mod, "DRIVER_DELETE_KEY_CAP", cap)
+        assert t.scan().where(F.col("_olake_id").isNull()).count() == 1
+
+
+def test_mor_time_travel_ignores_later_deletes(spark, tmp_path):
+    t = _mk_table(spark, str(tmp_path / "t"))
+    before = t.meta.current_snapshot_id
+    pre = _rows(t.scan())
+    merge_mor(t, cdc_batch(spark, BASE_N, 1, updates=4, deletes=5))
+    assert t.scan().count() < BASE_N
+    assert _rows(t.scan(snapshot_id=before)) == pre
+    assert len(pre) == BASE_N
+
+
+_TYPED_COLS = "v string, _op_type string, _cdc_timestamp long, _olake_timestamp long"
+
+
+def _typed_key_batch(spark, key_type, nullable, rows):
+    schema = T.StructType(
+        [T.StructField("_olake_id", key_type, nullable)] + T.StructType.fromDDL(_TYPED_COLS).fields
+    )
+    return spark.createDataFrame(rows, schema)
+
+
+def test_mor_scan_reads_delete_keys_of_every_written_type(spark, tmp_path):
+    """A delete file keeps the key type its batch was written with: an
+    ``int`` file from before an in-place int→bigint promotion, a
+    required ``bigint`` one after it. One scan resolves both, the same
+    as copy-on-write."""
+    base = [(i, f"v{i}", "c", 0, 0) for i in range(10)]
+    b1 = [(1, "u1", "u", 1, 1), (2, None, "d", 1, 1)]
+    b2 = [(3, "u3", "u", 2, 2), (4, None, "d", 2, 2), (1, "u1b", "u", 2, 2)]
+    mor, cow = (
+        Table.create(spark, str(tmp_path / n), "t", f"_olake_id int, {_TYPED_COLS}",
+                     identifier_fields=["_olake_id"])
+        for n in ("mor", "cow")
+    )
+    for t in (mor, cow):
+        t.commit_append(t.write_datafiles(_typed_key_batch(spark, T.IntegerType(), True, base)))
+    merge_mor(mor, _typed_key_batch(spark, T.IntegerType(), True, b1))
+    merge_into(cow, _typed_key_batch(spark, T.IntegerType(), True, b1))
+    b2_df = _typed_key_batch(spark, T.LongType(), False, b2)
+    for t in (mor, cow):
+        ev.evolve(t, b2_df.schema)
+        assert t.schema["_olake_id"].dataType == T.LongType()
+    merge_mor(mor, b2_df)
+    merge_into(cow, b2_df)
+    assert len(mor.delete_entries()) == 2
+    rows = _rows(mor.scan())
+    assert rows == _rows(cow.scan())
+    assert [r[:2] for r in rows] == [
+        (0, "v0"), (1, "u1b"), (3, "u3"), (5, "v5"), (6, "v6"), (7, "v7"), (8, "v8"), (9, "v9")
+    ]
+
+
+def test_mor_spark_delete_side_matches_driver_side(spark, tmp_path, monkeypatch):
+    """Above ``DRIVER_DELETE_KEY_CAP`` delete records the delete side is
+    read by Spark instead of the driver: same rows."""
+    mor, cow = _mor_and_cow(spark, tmp_path)
+    driver_rows = _rows(mor.scan())
+    monkeypatch.setattr(table_mod, "DRIVER_DELETE_KEY_CAP", 0)
+    df = mor.scan()
+    assert "LocalTableScan [__d_" not in _final_plan(df)
+    assert _rows(df) == driver_rows == _rows(cow.scan())
 
 
 def test_mor_scan_sort_merge_fallback_is_identical(spark, tmp_path):

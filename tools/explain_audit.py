@@ -84,8 +84,9 @@ AUDITS = {
     "merge_mor": [
         # merge-on-read scan: equality deletes resolve via an anti-join
         ("scan-side equality-delete anti-join", "LeftAnti"),
-        # the file→sequence maps are exact-stats LocalRelations, so the
-        # small delete side is broadcast: no shuffle, no Python-RDD scan
+        # the (key, delete sequence) side and the file→sequence map are
+        # exact-stats LocalRelations built on the driver, so the small
+        # delete side is broadcast: no shuffle, no Python-RDD scan
         ("delete side broadcast (hash anti)", "BroadcastHashJoin LeftAnti"),
         ("no Python-RDD plan table", "!Scan ExistingRDD"),
         ("not a nested loop", "!BroadcastNestedLoopJoin"),
