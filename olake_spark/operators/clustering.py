@@ -166,86 +166,80 @@ def cluster(
     if lineage is not None and lineage.stage_complete(stage):
         return {"skipped": True, "snapshot_id": lineage.stage_snapshot(stage)}
     target_size = target_size or table.target_file_size
-    # fold live equality deletes first — a clustered rewrite bumps row
-    # sequence numbers past live deletes (resurrection); same contract
-    # as compact()
-    if table.delete_entries():
+
+    def attempt(t: Table):
+        # fold live equality deletes first — a clustered rewrite bumps
+        # row sequence numbers past live deletes (resurrection); same
+        # contract as compact()
         from olake_spark.operators.merge import fold_deletes
 
-        fold_deletes(table, target_file_size=target_size, lineage=lineage,
-                     stage=f"{stage}-prefold")
-    entries = table.entries()
-    if not entries:
+        fold_deletes(t, target_file_size=target_size)
+        entries = t.entries()
+        if not entries:
+            return None
+        total_bytes = sum(e.file_size_bytes for e in entries)
+        total_rows = sum(e.record_count for e in entries) or 1
+        n_ranges = max(1, math.ceil(total_bytes / target_size))
+
+        df = t.scan(entries=entries)
+        # manifest stats make this free when dur/sr are tracked columns
+        b = _bounds(df, ["dur_ms", "sr_hz"], entries=entries)
+        if curve == "zorder":
+            key_udf = zorder_key_udf(b["dur_ms"][0], b["dur_ms"][1], b["sr_hz"][0], b["sr_hz"][1])
+            keyed = df.withColumn(KEY_COL, key_udf(*zorder_key_cols()))
+        elif curve == "hilbert":
+            key_udf = hilbert_key_udf(b["dur_ms"][0], b["dur_ms"][1], b["sr_hz"][0], b["sr_hz"][1])
+            keyed = df.withColumn(KEY_COL, key_udf("dur_ms", "sr_hz"))
+        else:
+            raise ValueError(f"unknown curve {curve!r}")
+
+        # --- sample pass: (key, est-bytes) → byte-weighted boundaries +
+        # skew map. Narrow projection: with a metadata-derived row_weight
+        # this reads 3 small columns, never the payload.
+        boundaries, salt_counts = _plan_ranges(
+            keyed, total_bytes, total_rows, n_ranges, sample_rows, row_weight, skew_cap
+        )
+
+        ident = t.meta.identifier_fields[0] if t.meta.identifier_fields else "clip_id"
+        assign = _assign_range_udf(boundaries, salt_counts)
+        ranged = keyed.withColumn(RANGE_COL, assign(F.col(KEY_COL), F.col(ident)))
+
+        # one output file per distinct range id (base ranges + salt lanes);
+        # the curve key column stays in the files (scan schema ignores it)
+        n_groups = len(boundaries) + 1 + sum(salt_counts.values())
+        new_entries = t.write_datafiles(
+            ranged,
+            fanout_col=RANGE_COL,
+            num_groups=max(n_groups, n_ranges),
+            sort_within=[KEY_COL],
+            extra_stats_cols=[KEY_COL],
+        )
+        return {e.path for e in entries}, new_entries, {
+            "operation": f"cluster-{curve}",
+            "summary": {"ranges": len(boundaries) + 1, "salted": len(salt_counts)},
+            "properties": {
+                CURVE_PROP: curve,
+                BOUNDS_PROP: json.dumps(b),
+                VERSION_PROP: str(KEY_VERSIONS[curve]),
+            },
+        }
+
+    done = table.rewrite(attempt)
+    if done is None:
         return {"files": 0}
-    total_bytes = sum(e.file_size_bytes for e in entries)
-    total_rows = sum(e.record_count for e in entries) or 1
-    n_ranges = max(1, math.ceil(total_bytes / target_size))
-
-    df = table.scan(entries=entries)
-    # manifest stats make this free when dur/sr are tracked columns
-    b = _bounds(df, ["dur_ms", "sr_hz"], entries=entries)
-    if curve == "zorder":
-        key_udf = zorder_key_udf(b["dur_ms"][0], b["dur_ms"][1], b["sr_hz"][0], b["sr_hz"][1])
-        keyed = df.withColumn(KEY_COL, key_udf(*zorder_key_cols()))
-    elif curve == "hilbert":
-        key_udf = hilbert_key_udf(b["dur_ms"][0], b["dur_ms"][1], b["sr_hz"][0], b["sr_hz"][1])
-        keyed = df.withColumn(KEY_COL, key_udf("dur_ms", "sr_hz"))
-    else:
-        raise ValueError(f"unknown curve {curve!r}")
-
-    # --- sample pass: (key, est-bytes) → byte-weighted boundaries +
-    # skew map. Narrow projection: with a metadata-derived row_weight
-    # this reads 3 small columns, never the payload.
-    boundaries, salt_counts = _plan_ranges(
-        keyed, total_bytes, total_rows, n_ranges, sample_rows, row_weight, skew_cap
-    )
-
-    ident = table.meta.identifier_fields[0] if table.meta.identifier_fields else "clip_id"
-    assign = _assign_range_udf(boundaries, salt_counts)
-    ranged = keyed.withColumn(RANGE_COL, assign(F.col(KEY_COL), F.col(ident)))
-
-    # one output file per distinct range id (base ranges + salt lanes);
-    # the curve key column stays in the files (scan schema ignores it)
-    n_groups = len(boundaries) + 1 + sum(salt_counts.values())
-    new_entries = table.write_datafiles(
-        ranged,
-        fanout_col=RANGE_COL,
-        num_groups=max(n_groups, n_ranges),
-        sort_within=[KEY_COL],
-        extra_stats_cols=[KEY_COL],
-    )
-    snap = table.commit_replace(
-        {e.path for e in entries},
-        new_entries,
-        operation=f"cluster-{curve}",
-        summary={"ranges": len(boundaries) + 1, "salted": len(salt_counts)},
-        properties={
-            CURVE_PROP: curve,
-            BOUNDS_PROP: json.dumps(b),
-            VERSION_PROP: str(KEY_VERSIONS[curve]),
-        },
-    )
+    snap, new_entries = done
     sizes = sorted(e.file_size_bytes for e in new_entries)
     med = sizes[len(sizes) // 2] if sizes else 0
     metrics = {
         "snapshot_id": snap.snapshot_id,
         "files": len(new_entries),
-        "ranges": len(boundaries) + 1,
-        "salted_ranges": len(salt_counts),
+        "ranges": snap.summary["ranges"],
+        "salted_ranges": snap.summary["salted"],
         "max_file_bytes": max(sizes) if sizes else 0,
         "median_file_bytes": med,
         "skew_ratio": (max(sizes) / med) if med else 0.0,
         "per_file_bytes": sizes,
     }
     if lineage is not None:
-        lineage.plan(stage, {"cluster": {"files_in": len(entries)}})
-        lineage.mark_done(
-            stage,
-            "cluster",
-            files=len(new_entries),
-            rows=sum(e.record_count for e in new_entries),
-            bytes_=sum(e.file_size_bytes for e in new_entries),
-            snapshot_id=snap.snapshot_id,
-        )
-        lineage.set_stage_snapshot(stage, snap.snapshot_id)
+        lineage.complete(stage, "cluster", snap.snapshot_id, new_entries)
     return metrics

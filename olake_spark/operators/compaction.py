@@ -28,43 +28,9 @@ from olake_spark.plans.lineage import LineageManifest
 from olake_spark.session import local_df
 from olake_spark.table.format import DataFileEntry
 from olake_spark.table.stats import file_entry
-from olake_spark.table.table import CommitConflict, Table
+from olake_spark.table.table import Table
 
 FANOUT_COL = "__olake_bin"
-
-#: full fold→plan→rewrite→commit retries per wave on a commit-time
-#: conflict (concurrent replace of an input file, or a delete file
-#: landing after the wave's fold)
-WAVE_RETRIES = 3
-
-
-def _remove_uncommitted(table: Table, entries: list[DataFileEntry]) -> None:
-    """Best-effort removal of files a conflicted (never-committed)
-    attempt wrote — they are referenced by no manifest, so leaving them
-    only strands storage until an out-of-band orphan sweep."""
-    from olake_spark.table.fsio import fs_for
-
-    from olake_spark.table import bloom as bloom_mod
-
-    for e in entries:
-        try:
-            fs, p = fs_for(table.abs_entry_path(e))
-            bloom_mod.delete_sidecar(p, fs=fs)
-            fs.delete_file(p)
-        except OSError:
-            pass
-
-
-def _refuse_live_deletes(t: Table) -> None:
-    """commit_replace validation hook: the wave's outputs were built
-    against a delete-free scan, so ANY live equality-delete file at
-    commit time means a concurrent MoR writer landed after the wave's
-    fold — committing would silently resurrect its deleted rows (the
-    row-count guard cannot see equality deletes). Conflict → the wave
-    re-folds and re-runs. A commit racing past this check instead
-    loses the create-or-fail version write and re-validates after refresh."""
-    if t.delete_entries():
-        raise CommitConflict("delete files committed during compaction wave")
 
 #: coalesce copied row groups to about this much (uncompressed) before
 #: flushing — compaction inputs are SMALL files (often one tiny row
@@ -338,6 +304,36 @@ def _rewrite_bins(table: Table, bins: list[Bin], entry_by_path: dict[str, DataFi
     return paths, new_entries
 
 
+def _wave_attempt(wave: list[Bin], target_size: int, mode: str):
+    """``Table.rewrite`` attempt for one compaction wave: fold live
+    deletes, keep the bins whose inputs are all still live, rewrite."""
+
+    def attempt(t: Table):
+        # Neither rewrite path tolerates LIVE equality-delete files:
+        # the copy path would resurrect deleted rows byte-for-byte, and
+        # the Spark path's pre-commit row guard would abort (the scan
+        # applies deletes, so written < planned). compact's prefold
+        # normally leaves none, but its lineage stamp cannot be trusted
+        # against deletes that landed AFTER it (a resumed run racing a
+        # concurrent MoR writer), so every attempt folds first; one
+        # landing after this fold makes the commit refuse the attempt.
+        from olake_spark.operators.merge import fold_deletes
+
+        fold_deletes(t, target_file_size=target_size)
+        # a resumed wave may reference files replaced by its own
+        # earlier, half-committed attempt (or by the fold above) —
+        # revalidate against live paths
+        entry_by_path = {e.path: e for e in t.entries()}
+        live = [b for b in wave if all(p in entry_by_path for p, _ in b.items)]
+        if not live:
+            return None
+        rewrite = _rewrite_bins if mode == "spark" else _copy_bins
+        removed, new_entries = rewrite(t, live, entry_by_path)
+        return set(removed), new_entries, {"operation": "compact", "summary": {"bins": len(live)}}
+
+    return attempt
+
+
 def compact(
     table: Table,
     target_size: int | None = None,
@@ -364,6 +360,9 @@ def compact(
     exactly the delete-affected files and drops the delete files),
     then compaction plans against the clean table. Iceberg's
     rewrite-data-files maintenance has the same ordering contract.
+    Each wave commits through ``Table.rewrite``: a delete file landing
+    after the snapshot the wave read makes its replace refuse, and the
+    wave removes its outputs, folds again and re-plans.
 
     mode: "auto" (default) uses the pyarrow row-group COPY path
     (`_copy_bins` — one task per bin, no shuffle, no JVM byte path)
@@ -376,11 +375,9 @@ def compact(
         # any copy-vs-spark A/B the caller thinks it is running
         raise ValueError(f"compact mode must be 'auto' or 'spark', got {mode!r}")
     target_size = target_size or table.target_file_size
-    if table.delete_entries():
-        from olake_spark.operators.merge import fold_deletes
+    from olake_spark.operators.merge import fold_deletes
 
-        fold_deletes(table, target_file_size=target_size, lineage=lineage,
-                     stage=f"{stage}-prefold")
+    fold_deletes(table, target_file_size=target_size, lineage=lineage, stage=f"{stage}-prefold")
     # resume: execute the PERSISTED plan, never a fresh re-plan — after a
     # partial run the file set has changed and a re-plan would misalign
     # wave ids with completed units (chunk-protocol parity: the chunk set
@@ -417,56 +414,13 @@ def compact(
         if lineage is not None and lineage.is_done(stage, unit):
             done_waves += 1
             continue
-        # Neither rewrite path tolerates LIVE equality-delete files:
-        # the copy path would resurrect deleted rows byte-for-byte, and
-        # the Spark path's pre-commit row guard would abort (the scan
-        # applies deletes, so written < planned). The prefold above
-        # normally guarantees delete-free input, but its lineage stamp
-        # cannot be trusted against deletes that landed AFTER it (a
-        # resumed run racing a concurrent MoR writer) — so fold
-        # unconditionally at wave time, AND re-assert delete-free-ness
-        # inside commit_replace's validation (a delete committed between
-        # this fold and the commit would otherwise be resurrected
-        # invisibly: the row-count guard can't see equality deletes).
-        # On CommitConflict the whole wave retries: fresh fold, fresh
-        # live-path plan, fresh rewrite.
-        wv_live: list[Bin] = []
-        snap = None
-        removed: list[str] = []
-        new_entries: list[DataFileEntry] = []
-        for wave_attempt in range(WAVE_RETRIES + 1):
-            if table.delete_entries():
-                from olake_spark.operators.merge import fold_deletes
-
-                fold_deletes(table, target_file_size=target_size)
-            # a resumed wave may reference files replaced by its own
-            # earlier, half-committed attempt (or by the fold above) —
-            # revalidate against live paths
-            entry_by_path = {e.path: e for e in table.entries()}
-            wv_live = [b for b in wv if all(p in entry_by_path for p, _ in b.items)]
-            if not wv_live:
-                break
-            rewrite = _rewrite_bins if mode == "spark" else _copy_bins
-            removed, new_entries = rewrite(table, wv_live, entry_by_path)
-            try:
-                snap = table.commit_replace(
-                    set(removed), new_entries, operation="compact",
-                    summary={"bins": len(wv_live)},
-                    validate_extra=_refuse_live_deletes,
-                )
-                break
-            except CommitConflict:
-                # the attempt's outputs were never committed — remove
-                # them (best-effort) so retries don't strand orphans
-                _remove_uncommitted(table, new_entries)
-                table.refresh()
-                if wave_attempt == WAVE_RETRIES:
-                    raise
-        if not wv_live:
+        done = table.rewrite(_wave_attempt(wv, target_size, mode))
+        if done is None:
             if lineage is not None:
                 lineage.mark_done(stage, unit, snapshot_id=table.meta.current_snapshot_id)
             continue
-        total_in += len(removed)
+        snap, new_entries = done
+        total_in += snap.summary["removed-files"]
         total_out += len(new_entries)
         if ticker is not None:
             ticker.record_synced(sum(e.record_count for e in new_entries))

@@ -13,8 +13,8 @@ from __future__ import annotations
 import os
 import time
 
-from olake_spark.table import bloom as bloom_mod
 from olake_spark.table import format as fmt
+from olake_spark.table import fsio
 from olake_spark.table.table import Table
 
 
@@ -73,15 +73,11 @@ def expire_snapshots(
     if dry_run:
         change(table)
     elif table._commit_meta(change, "snapshot expiry") is not None:
-        # metadata first (atomic version bump), then physical deletes —
-        # a crash between the two leaves only harmless orphans
+        # metadata first (atomic version bump), then physical deletes,
+        # each data file with its key-bloom sidecar — a crash between
+        # the two leaves only harmless orphans
         for rel in list(plan["dead"]) + sorted(plan["dead_manifests"]):
-            p = os.path.join(table.location, rel)
-            # a dead data file takes its advisory key-bloom sidecar
-            # (table/bloom.py) with it; no-op for manifests
-            for f in (p, p + bloom_mod.SIDECAR_SUFFIX):
-                if os.path.exists(f):
-                    os.remove(f)
+            fsio.remove_file(os.path.join(table.location, rel))
     if not plan["expired"]:
         return {"expired": 0, "deleted_files": 0, "freed_bytes": 0}
     return {

@@ -124,85 +124,10 @@ def _key_udf_for(curve: str, bounds: dict):
     raise ValueError(f"unknown curve {curve!r}")
 
 
-def cluster_incremental(
-    table: Table,
-    curve: str | None = None,
-    target_size: int | None = None,
-    skew_cap: float = 2.0,
-    sample_rows: int = 100_000,
-    max_bytes: int | None = None,
-    lineage: LineageManifest | None = None,
-    stage: str | None = None,
-    row_weight: str = "length(bytes) + 64",
-) -> dict:
-    """Restore curve clustering by rewriting only unsorted/overlapping
-    files. Returns metrics with ``mode`` ∈ {full, noop, incremental}.
-
-    ``max_bytes`` caps the sorted bytes pulled into one run (newcomer
-    bytes are always rewritten; at least one overlap component is
-    always taken so every run makes progress).
-    """
-    stage = stage or f"cluster-incr-{curve or 'auto'}"
-    if lineage is not None and lineage.stage_complete(stage):
-        return {"skipped": True, "snapshot_id": lineage.stage_snapshot(stage)}
-
-    state_curve = table.meta.properties.get(CURVE_PROP)
-    state_bounds = table.meta.properties.get(BOUNDS_PROP)
-    state_version = table.meta.properties.get(VERSION_PROP)
-    if state_curve is None or state_bounds is None or (
-        curve is not None and curve != state_curve
-    ) or (
-        state_curve is not None
-        and state_version != str(KEY_VERSIONS.get(state_curve, -1))
-    ):
-        # a KEY_VERSION mismatch means the persisted __curve_key bounds
-        # were computed with a different hash than this build produces —
-        # range-joining new keys against them would silently mis-detect
-        # overlap, so re-bootstrap instead of comparing key spaces.
-        # bootstrap (or curve change): one full clustering records the
-        # curve state this operator maintains from then on; a version
-        # re-bootstrap keeps the table's recorded curve
-        m = cluster(
-            table,
-            curve=curve or state_curve or "zorder",
-            target_size=target_size,
-            skew_cap=skew_cap,
-            sample_rows=sample_rows,
-            lineage=lineage,
-            stage=stage,
-            row_weight=row_weight,
-        )
-        m["mode"] = "full"
-        return m
-
-    curve = state_curve
-    bounds = json.loads(state_bounds)
-    target_size = target_size or table.target_file_size
-
-    # clustered rewrites bump sequence numbers past live equality
-    # deletes — fold first (same contract as cluster/compact)
-    if table.delete_entries():
-        from olake_spark.operators.merge import fold_deletes
-
-        fold_deletes(table, target_file_size=target_size, lineage=lineage,
-                     stage=f"{stage}-prefold")
-
-    entries = table.entries()
-    sorted_e = [e for e in entries if _key_bounds(e) is not None]
-    new_e = [e for e in entries if _key_bounds(e) is None]
-    read_amp_before = read_amplification(entries)
-
-    comps = _overlap_components(sorted_e) if sorted_e else []
-    overlap_comps = [c for c in comps if len(c) > 1]
-    if not new_e and not overlap_comps:
-        return {
-            "mode": "noop",
-            "files": 0,
-            "read_amp": round(read_amp_before, 3),
-        }
-
-    key_udf, key_cols = _key_udf_for(curve, bounds)
-
+def _select_components(t: Table, key_udf, key_cols, sorted_e, new_e, comps, max_bytes) -> list:
+    """The sorted files to rewrite along with the newcomers ``new_e``:
+    whole overlap components, best rows-landed-per-byte first, within
+    ``max_bytes``."""
     # where do newcomer rows land? One NARROW pass over newcomers only
     # (curve-axis columns, never the payload): compute keys, range-join
     # against broadcast manifest bounds for per-file hit counts, plus
@@ -211,12 +136,12 @@ def cluster_incremental(
     new_span: tuple[int, int] | None = None
     if new_e:
         nk = (
-            table.scan(entries=new_e)
+            t.scan(entries=new_e)
             .select(key_udf(*[c if not isinstance(c, str) else F.col(c) for c in key_cols]).alias("__k"))
         )
         if sorted_e:
             bdf = local_df(
-                table.spark,
+                t.spark,
                 [(e.path, *_key_bounds(e)) for e in sorted_e],
                 "path string, lo long, hi long",
             )
@@ -273,65 +198,135 @@ def cluster_incremental(
         if spent > budget:
             break
 
-    rewrite = new_e + selected
-    if not rewrite:
+    return selected
+
+
+def cluster_incremental(
+    table: Table,
+    curve: str | None = None,
+    target_size: int | None = None,
+    skew_cap: float = 2.0,
+    sample_rows: int = 100_000,
+    max_bytes: int | None = None,
+    lineage: LineageManifest | None = None,
+    stage: str | None = None,
+    row_weight: str = "length(bytes) + 64",
+) -> dict:
+    """Restore curve clustering by rewriting only unsorted/overlapping
+    files. Returns metrics with ``mode`` ∈ {full, noop, incremental}.
+
+    ``max_bytes`` caps the sorted bytes pulled into one run (newcomer
+    bytes are always rewritten; at least one overlap component is
+    always taken so every run makes progress).
+    """
+    stage = stage or f"cluster-incr-{curve or 'auto'}"
+    if lineage is not None and lineage.stage_complete(stage):
+        return {"skipped": True, "snapshot_id": lineage.stage_snapshot(stage)}
+
+    state_curve = table.meta.properties.get(CURVE_PROP)
+    state_bounds = table.meta.properties.get(BOUNDS_PROP)
+    state_version = table.meta.properties.get(VERSION_PROP)
+    if state_curve is None or state_bounds is None or (
+        curve is not None and curve != state_curve
+    ) or (
+        state_curve is not None
+        and state_version != str(KEY_VERSIONS.get(state_curve, -1))
+    ):
+        # a KEY_VERSION mismatch means the persisted __curve_key bounds
+        # were computed with a different hash than this build produces —
+        # range-joining new keys against them would silently mis-detect
+        # overlap, so re-bootstrap instead of comparing key spaces.
+        # bootstrap (or curve change): one full clustering records the
+        # curve state this operator maintains from then on; a version
+        # re-bootstrap keeps the table's recorded curve
+        m = cluster(
+            table,
+            curve=curve or state_curve or "zorder",
+            target_size=target_size,
+            skew_cap=skew_cap,
+            sample_rows=sample_rows,
+            lineage=lineage,
+            stage=stage,
+            row_weight=row_weight,
+        )
+        m["mode"] = "full"
+        return m
+
+    curve = state_curve
+    bounds = json.loads(state_bounds)
+    target_size = target_size or table.target_file_size
+
+    plan: dict = {}
+
+    def attempt(t: Table):
+        # clustered rewrites bump sequence numbers past live equality
+        # deletes — fold first (same contract as cluster/compact)
+        from olake_spark.operators.merge import fold_deletes
+
+        fold_deletes(t, target_file_size=target_size)
+        entries = plan["entries"] = t.entries()
+        sorted_e = [e for e in entries if _key_bounds(e) is not None]
+        new_e = [e for e in entries if _key_bounds(e) is None]
+        comps = _overlap_components(sorted_e) if sorted_e else []
+        if not new_e and not any(len(c) > 1 for c in comps):
+            return None
+        key_udf, key_cols = _key_udf_for(curve, bounds)
+        rewrite = plan["rewrite"] = new_e + _select_components(
+            t, key_udf, key_cols, sorted_e, new_e, comps, max_bytes
+        )
+        if not rewrite:
+            return None
+        total_bytes = sum(e.file_size_bytes for e in rewrite)
+        total_rows = sum(e.record_count for e in rewrite) or 1
+        n_ranges = max(1, math.ceil(total_bytes / target_size))
+
+        keyed = t.scan(entries=rewrite).withColumn(
+            KEY_COL, key_udf(*[c if not isinstance(c, str) else F.col(c) for c in key_cols])
+        )
+        boundaries, salt_counts = _plan_ranges(
+            keyed, total_bytes, total_rows, n_ranges, sample_rows, row_weight, skew_cap
+        )
+        ident = t.meta.identifier_fields[0] if t.meta.identifier_fields else "clip_id"
+        assign = _assign_range_udf(boundaries, salt_counts)
+        ranged = keyed.withColumn(RANGE_COL, assign(F.col(KEY_COL), F.col(ident)))
+        n_groups = len(boundaries) + 1 + sum(salt_counts.values())
+        new_entries = t.write_datafiles(
+            ranged,
+            fanout_col=RANGE_COL,
+            num_groups=max(n_groups, n_ranges),
+            sort_within=[KEY_COL],
+            extra_stats_cols=[KEY_COL],
+        )
+        return {e.path for e in rewrite}, new_entries, {
+            "operation": f"cluster-incr-{curve}",
+            "summary": {
+                "newcomers": len(new_e),
+                "overlap-files": len(rewrite) - len(new_e),
+                "carried-over": len(entries) - len(rewrite),
+            },
+        }
+
+    done = table.rewrite(attempt)
+    entries = plan["entries"]
+    read_amp_before = read_amplification(entries)
+    if done is None:
         return {"mode": "noop", "files": 0, "read_amp": round(read_amp_before, 3)}
-
-    total_bytes = sum(e.file_size_bytes for e in rewrite)
-    total_rows = sum(e.record_count for e in rewrite) or 1
-    n_ranges = max(1, math.ceil(total_bytes / target_size))
-
-    keyed = table.scan(entries=rewrite).withColumn(
-        KEY_COL, key_udf(*[c if not isinstance(c, str) else F.col(c) for c in key_cols])
-    )
-    boundaries, salt_counts = _plan_ranges(
-        keyed, total_bytes, total_rows, n_ranges, sample_rows, row_weight, skew_cap
-    )
-    ident = table.meta.identifier_fields[0] if table.meta.identifier_fields else "clip_id"
-    assign = _assign_range_udf(boundaries, salt_counts)
-    ranged = keyed.withColumn(RANGE_COL, assign(F.col(KEY_COL), F.col(ident)))
-    n_groups = len(boundaries) + 1 + sum(salt_counts.values())
-    new_entries = table.write_datafiles(
-        ranged,
-        fanout_col=RANGE_COL,
-        num_groups=max(n_groups, n_ranges),
-        sort_within=[KEY_COL],
-        extra_stats_cols=[KEY_COL],
-    )
-    snap = table.commit_replace(
-        {e.path for e in rewrite},
-        new_entries,
-        operation=f"cluster-incr-{curve}",
-        summary={
-            "newcomers": len(new_e),
-            "overlap-files": len(selected),
-            "carried-over": len(entries) - len(rewrite),
-        },
-    )
-    read_amp_after = read_amplification(table.entries())
+    snap, new_entries = done
+    rewrite = plan["rewrite"]
     metrics = {
         "mode": "incremental",
         "snapshot_id": snap.snapshot_id,
         "files_in": len(rewrite),
         "files_total": len(entries),
         "files_out": len(new_entries),
-        "bytes_in": total_bytes,
+        "bytes_in": sum(e.file_size_bytes for e in rewrite),
         "bytes_table": sum(e.file_size_bytes for e in entries),
-        "newcomers": len(new_e),
-        "overlap_files": len(selected),
-        "carried_over": len(entries) - len(rewrite),
+        "newcomers": snap.summary["newcomers"],
+        "overlap_files": snap.summary["overlap-files"],
+        "carried_over": snap.summary["carried-over"],
         "read_amp_before": round(read_amp_before, 3),
-        "read_amp_after": round(read_amp_after, 3),
+        "read_amp_after": round(read_amplification(table.entries()), 3),
     }
     if lineage is not None:
-        lineage.plan(stage, {"cluster_incremental": {"files_in": len(rewrite)}})
-        lineage.mark_done(
-            stage,
-            "cluster_incremental",
-            files=len(new_entries),
-            rows=sum(e.record_count for e in new_entries),
-            bytes_=sum(e.file_size_bytes for e in new_entries),
-            snapshot_id=snap.snapshot_id,
-        )
-        lineage.set_stage_snapshot(stage, snap.snapshot_id)
+        lineage.complete(stage, "cluster_incremental", snap.snapshot_id, new_entries)
     return metrics

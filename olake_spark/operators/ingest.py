@@ -98,14 +98,5 @@ def append_batch(
         "partitions": sorted({e.partition for e in entries}),
     }
     if lineage is not None:
-        lineage.plan(stage, {"append": {"files": len(entries)}})
-        lineage.mark_done(
-            stage,
-            "append",
-            files=len(entries),
-            rows=metrics["rows"],
-            bytes_=sum(e.file_size_bytes for e in entries),
-            snapshot_id=snap.snapshot_id,
-        )
-        lineage.set_stage_snapshot(stage, snap.snapshot_id)
+        lineage.complete(stage, "append", snap.snapshot_id, entries)
     return metrics

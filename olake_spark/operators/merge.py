@@ -42,7 +42,7 @@ from pyspark.sql.window import Window
 from olake_spark.plans.lineage import LineageManifest
 from olake_spark.session import local_df
 from olake_spark.table import bloom as bloom_mod
-from olake_spark.table.table import CommitConflict, Table
+from olake_spark.table.table import Table
 
 # op priority for tie-breaks: INSERT < READ < UPDATE < DELETE
 OP_PRIORITY = {"c": 0, "r": 1, "u": 2, "d": 3}
@@ -257,65 +257,16 @@ def _uniform_hex_key(table: Table, key: str) -> bool:
     return key == "_olake_id"
 
 
-def merge_into(
+def _write_merged(
     table: Table,
     source: DataFrame,
-    key: str = "_olake_id",
-    target_file_size: int | None = None,
-    lineage: LineageManifest | None = None,
-    stage: str = "merge",
-) -> dict:
-    """Apply a CDC batch to the table; returns metrics.
-
-    Idempotent: replaying the same batch after a completed commit is a
-    no-op when driven through the same lineage manifest (the committed
-    snapshot id is recorded before the replace, LSN-guard style).
-
-    ``source`` MUST be a deterministic plan: it is scanned twice (a
-    narrow keys-only pass for pruning/sizing, then the full merge). A
-    nondeterministic source (rand()-derived columns, an uncached
-    re-executed transform that can change between scans) can make the
-    pruned file set diverge from the rows actually merged, leaving
-    duplicates. Callers with nondeterministic pipelines should persist
-    the batch first (``cdc_stream_merge`` caches its transform output
-    for exactly this reason).
-    """
-    if lineage is not None and lineage.stage_complete(stage):
-        return {"skipped": True, "snapshot_id": lineage.stage_snapshot(stage)}
-
-    target_file_size = target_file_size or table.target_file_size
-    # Scan discipline: the FULL batch (payload columns included) is read
-    # exactly once, inside the merge plan below. Pruning and sizing need
-    # only the key column — a separate NARROW pass (columns pruned down
-    # to the key at the parquet scan) whose distinct-key count equals
-    # the post-dedup winner count (one winner per key, so no window
-    # needed here). Round 1 re-ran the full dedup 3×; an intermediate
-    # fix materialized the full batch via localCheckpoint, but pushing
-    # ~10 KB binary rows through the block manager is memory-bandwidth-
-    # bound and anti-scales with cores — keys-only + single full pass
-    # is both fewer bytes and cleanly parallel.
-    _assert_scan_stable(source, "merge")
-    keys_df = source.select(key).distinct().cache()
-    src_rows = keys_df.count()
-    if src_rows == 0:
-        keys_df.unpersist()
-        return {"skipped": True, "snapshot_id": None, "source_rows": 0}
-
-    affected = affected_file_paths(table, keys_df, key)
-    entry_by_path = {e.path: e for e in table.data_entries()}
-    aff_entries = [entry_by_path[p] for p in affected]
-    target_sub = table.scan(entries=aff_entries)
-
-    # size the output: surviving target bytes + source contribution
-    aff_bytes = sum(e.file_size_bytes for e in aff_entries)
-    aff_rows = sum(e.record_count for e in aff_entries) or 1
-    bytes_per_row = (aff_bytes / aff_rows) if aff_bytes else 4096.0
-    est_bytes = aff_bytes + int(src_rows * bytes_per_row) if aff_bytes else max(src_rows, 1) * 4096
-    n_files = max(1, math.ceil(est_bytes / target_file_size))
-    # W4 roll enforcement: even a mis-estimated or skewed output group
-    # starts a new file at the target row budget
-    roll_rows = max(1, int(target_file_size / bytes_per_row))
-
+    target_sub: DataFrame,
+    key: str,
+    n_files: int,
+    roll_rows: int,
+) -> list:
+    """Upsert ``source`` over the affected rows ``target_sub`` and
+    write the result as about ``n_files`` key-ranged files."""
     # range-partitioned output keeps per-file key bounds tight (the
     # next merge prunes well). For the md5 identifier the key space is
     # uniform hex, so range ids are ANALYTIC from the key prefix — one
@@ -379,7 +330,7 @@ def merge_into(
             )
             .select("__rid", *tcols)
         )
-        new_entries = table.write_datafiles(
+        return table.write_datafiles(
             merged,
             fanout_col="__rid",
             num_groups=n_files,
@@ -389,9 +340,9 @@ def merge_into(
         )
     else:
         s = dedup_batch(source, key)
-        t, s_al = target_sub.alias("t"), s.alias("s")
+        tgt, s_al = target_sub.alias("t"), s.alias("s")
         cond = F.col(f"t.{key}") == F.col(f"s.{key}")
-        joined = t.join(s_al.hint("merge"), cond, "full_outer")  # sort-merge mandated
+        joined = tgt.join(s_al.hint("merge"), cond, "full_outer")  # sort-merge mandated
         src_present = F.col(f"s.{key}").isNotNull()
         cols = [
             F.when(src_present, F.col(f"s.{c}")).otherwise(F.col(f"t.{c}")).alias(c)
@@ -400,39 +351,93 @@ def merge_into(
         merged = joined.filter(
             F.coalesce(F.col("s._op_type"), F.lit("")) != F.lit("d")
         ).select(*cols)
-        new_entries = table.write_datafiles(
+        return table.write_datafiles(
             merged,
             range_partition_cols=[key],
             num_groups=n_files,
             max_records_per_file=roll_rows,
         )
-    keys_df.unpersist()
-    snap = table.commit_replace(
-        set(affected),
-        new_entries,
-        operation="merge",
-        summary={"source-rows": src_rows, "pruned-files": len(entry_by_path) - len(affected)},
-    )
+
+
+def merge_into(
+    table: Table,
+    source: DataFrame,
+    key: str = "_olake_id",
+    target_file_size: int | None = None,
+    lineage: LineageManifest | None = None,
+    stage: str = "merge",
+) -> dict:
+    """Apply a CDC batch to the table; returns metrics.
+
+    Idempotent: replaying the same batch after a completed commit is a
+    no-op when driven through the same lineage manifest (the committed
+    snapshot id is recorded before the replace, LSN-guard style).
+
+    ``source`` MUST be a deterministic plan: it is scanned twice (a
+    narrow keys-only pass for pruning/sizing, then the full merge). A
+    nondeterministic source (rand()-derived columns, an uncached
+    re-executed transform that can change between scans) can make the
+    pruned file set diverge from the rows actually merged, leaving
+    duplicates. Callers with nondeterministic pipelines should persist
+    the batch first (``cdc_stream_merge`` caches its transform output
+    for exactly this reason).
+    """
+    if lineage is not None and lineage.stage_complete(stage):
+        return {"skipped": True, "snapshot_id": lineage.stage_snapshot(stage)}
+
+    target_file_size = target_file_size or table.target_file_size
+    # Scan discipline: the FULL batch (payload columns included) is read
+    # exactly once, inside the merge plan below. Pruning and sizing need
+    # only the key column — a separate NARROW pass (columns pruned down
+    # to the key at the parquet scan) whose distinct-key count equals
+    # the post-dedup winner count (one winner per key, so no window
+    # needed here). Round 1 re-ran the full dedup 3×; an intermediate
+    # fix materialized the full batch via localCheckpoint, but pushing
+    # ~10 KB binary rows through the block manager is memory-bandwidth-
+    # bound and anti-scales with cores — keys-only + single full pass
+    # is both fewer bytes and cleanly parallel.
+    _assert_scan_stable(source, "merge")
+    keys_df = source.select(key).distinct().cache()
+    src_rows = keys_df.count()
+    if src_rows == 0:
+        keys_df.unpersist()
+        return {"skipped": True, "snapshot_id": None, "source_rows": 0}
+
+    def attempt(t: Table):
+        affected = affected_file_paths(t, keys_df, key)
+        entry_by_path = {e.path: e for e in t.data_entries()}
+        aff_entries = [entry_by_path[p] for p in affected]
+        target_sub = t.scan(entries=aff_entries)
+
+        # size the output: surviving target bytes + source contribution
+        aff_bytes = sum(e.file_size_bytes for e in aff_entries)
+        aff_rows = sum(e.record_count for e in aff_entries) or 1
+        bytes_per_row = (aff_bytes / aff_rows) if aff_bytes else 4096.0
+        est_bytes = aff_bytes + int(src_rows * bytes_per_row) if aff_bytes else max(src_rows, 1) * 4096
+        n_files = max(1, math.ceil(est_bytes / target_file_size))
+        # W4 roll enforcement: even a mis-estimated or skewed output group
+        # starts a new file at the target row budget
+        roll_rows = max(1, int(target_file_size / bytes_per_row))
+
+        new_entries = _write_merged(t, source, target_sub, key, n_files, roll_rows)
+        summary = {"source-rows": src_rows, "pruned-files": len(entry_by_path) - len(affected)}
+        return set(affected), new_entries, {"operation": "merge", "summary": summary}
+
+    try:
+        snap, new_entries = table.rewrite(attempt)
+    finally:
+        keys_df.unpersist()
     metrics = {
         "snapshot_id": snap.snapshot_id,
         "source_rows": src_rows,
-        "affected_files": len(affected),
-        "pruned_files": len(entry_by_path) - len(affected),
+        "affected_files": snap.summary["removed-files"],
+        "pruned_files": snap.summary["pruned-files"],
         "written_files": len(new_entries),
         "written_rows": sum(e.record_count for e in new_entries),
         "written_bytes": sum(e.file_size_bytes for e in new_entries),
     }
     if lineage is not None:
-        lineage.plan(stage, {"merge": {"affected": len(affected)}})
-        lineage.mark_done(
-            stage,
-            "merge",
-            files=metrics["written_files"],
-            rows=metrics["written_rows"],
-            bytes_=metrics["written_bytes"],
-            snapshot_id=snap.snapshot_id,
-        )
-        lineage.set_stage_snapshot(stage, snap.snapshot_id)
+        lineage.complete(stage, "merge", snap.snapshot_id, new_entries)
     return metrics
 
 
@@ -530,16 +535,7 @@ def merge_mor(
         ),
     }
     if lineage is not None:
-        lineage.plan(stage, {"merge-mor": {"source_rows": src_rows}})
-        lineage.mark_done(
-            stage,
-            "merge-mor",
-            files=metrics["written_files"],
-            rows=metrics["written_rows"],
-            bytes_=metrics["written_bytes"],
-            snapshot_id=snap.snapshot_id,
-        )
-        lineage.set_stage_snapshot(stage, snap.snapshot_id)
+        lineage.complete(stage, "merge-mor", snap.snapshot_id, del_entries + data_entries)
     return metrics
 
 
@@ -560,138 +556,98 @@ def fold_deletes(
     Concurrency: the rewrite gives surviving rows a NEW sequence number,
     so a delete file committed by a concurrent MoR writer mid-fold would
     be silently out-sequenced for any key living in a rewritten file
-    (sequence-strict anti-join → resurrection). The replace commit
-    therefore validates that every live delete file at commit time is
-    one this fold consumed; a newer one raises CommitConflict and the
-    whole fold retries against refreshed metadata.
+    (sequence-strict anti-join → resurrection). The fold commits through
+    ``Table.rewrite``, whose replace refuses a delete file newer than
+    the snapshot the fold read; the fold then cleans up and re-plans
+    against the refreshed table, folding that delete too.
     """
     if lineage is not None and lineage.stage_complete(stage):
         return {"skipped": True, "snapshot_id": lineage.stage_snapshot(stage)}
-    last_err: Exception | None = None
-    for _attempt in range(FOLD_RETRIES + 1):
-        try:
-            return _fold_deletes_once(table, target_file_size, lineage, stage)
-        except CommitConflict as e:
-            last_err = e
-            table.refresh()
-    raise last_err  # type: ignore[misc]
-
-
-#: full re-derive→rewrite→commit retries on a mid-fold delete commit
-FOLD_RETRIES = 3
-
-
-def _fold_deletes_once(
-    table: Table,
-    target_file_size: int | None,
-    lineage: LineageManifest | None,
-    stage: str,
-) -> dict:
-    dels = table.delete_entries()
-    if not dels:
-        return {"skipped": True, "delete_files": 0}
     key = (table.meta.identifier_fields or ["_olake_id"])[0]
     target_file_size = target_file_size or table.target_file_size
 
-    key_schema = T.StructType([next(f for f in table.schema.fields if f.name == key)])
-    del_keys = table.spark.read.schema(key_schema).parquet(
-        *[os.path.join(table.location, e.path) for e in dels]
-    )
-    affected = affected_file_paths(table, del_keys, key)
-    entry_by_path = {e.path: e for e in table.data_entries()}
-    aff_entries = [entry_by_path[p] for p in affected]
-
-    new_entries: list = []
-    if aff_entries:
-        # scan applies the deletes; only affected files are read + rewritten.
-        # FILE-PRESERVING rewrite: each affected file already covers a
-        # tight key range (outputs are range-partitioned everywhere), and
-        # dropping deleted rows never widens it — so each input file maps
-        # to one output group via a broadcast path→group join and the
-        # write needs NO shuffle at all (the delete anti-join broadcasts
-        # its tiny side too, so the whole fold is one map-side pass).
-        # The previous repartitionByRange(key) plan both shuffled the
-        # full payload AND sampled its child — re-executing the entire
-        # scan+anti-join a second time just to find boundaries.
-        survivors = table.scan(entries=aff_entries, file_col="__file")
-        plan_rows = [
-            (table.abs_entry_path(e), i) for i, e in enumerate(aff_entries)
-        ]
-        plan_df = local_df(table.spark, plan_rows, "__file string, __rid int")
-        # LEFT join + loud failure on an unmatched row: if the scan's
-        # file_col and abs_entry_path() normalizations ever disagree
-        # (URI scheme, relative location), an inner join would drop
-        # every row and the replace commit would write EMPTY output
-        # over the affected files — silent data loss. A row-count guard
-        # (compaction's approach) can't distinguish that from deletes
-        # legitimately removing rows, so fail per-row instead.
-        survivors = (
-            survivors.join(F.broadcast(plan_df), "__file", "left")
-            .withColumn(
-                "__rid",
-                F.when(
-                    F.col("__rid").isNull(),
-                    F.raise_error(
-                        F.concat(
-                            F.lit("fold_deletes: scanned file not in rewrite plan "
-                                  "(path normalization mismatch): "),
-                            F.col("__file"),
-                        )
-                    ).cast("int"),
-                ).otherwise(F.col("__rid")),
-            )
-            .drop("__file")
+    def attempt(t: Table):
+        dels = t.delete_entries()
+        if not dels:
+            return None
+        key_schema = T.StructType([next(f for f in t.schema.fields if f.name == key)])
+        del_keys = t.spark.read.schema(key_schema).parquet(
+            *[os.path.join(t.location, e.path) for e in dels]
         )
-        aff_bytes = sum(e.file_size_bytes for e in aff_entries)
-        aff_rows = sum(e.record_count for e in aff_entries) or 1
-        roll_rows = max(1, int(target_file_size / max(1.0, aff_bytes / aff_rows)))
-        new_entries = table.write_datafiles(
-            survivors,
-            fanout_col="__rid",
-            num_groups=len(aff_entries),
-            sort_within=[key],
-            max_records_per_file=roll_rows,
-            shuffle=False,
-        )
-    consumed = {e.path for e in dels}
+        affected = affected_file_paths(t, del_keys, key)
+        entry_by_path = {e.path: e for e in t.data_entries()}
+        aff_entries = [entry_by_path[p] for p in affected]
+        new_entries = _fold_rewrite(t, aff_entries, key, target_file_size) if aff_entries else []
+        summary = {"folded-delete-files": len(dels), "rewritten-files": len(affected)}
+        removed = set(affected) | {e.path for e in dels}
+        return removed, new_entries, {"operation": "fold-deletes", "summary": summary}
 
-    def _no_newer_deletes(t: Table) -> None:
-        newer = {d.path for d in t.delete_entries()} - consumed
-        if newer:
-            raise CommitConflict(
-                f"delete files committed mid-fold: {sorted(newer)[:5]}"
-            )
-
-    try:
-        snap = table.commit_replace(
-            set(affected) | consumed,
-            new_entries,
-            operation="fold-deletes",
-            summary={"folded-delete-files": len(dels), "rewritten-files": len(affected)},
-            validate_extra=_no_newer_deletes,
-        )
-    except CommitConflict:
-        # the attempt's rewrite outputs were never committed — remove
-        # them before the caller's retry so conflicts don't strand
-        # orphan files (best-effort)
-        from olake_spark.table.fsio import fs_for
-
-        for e in new_entries:
-            try:
-                fs, p = fs_for(table.abs_entry_path(e))
-                fs.delete_file(p)
-            except OSError:
-                pass
-        raise
+    done = table.rewrite(attempt)
+    if done is None:
+        return {"skipped": True, "delete_files": 0}
+    snap, new_entries = done
     metrics = {
         "snapshot_id": snap.snapshot_id,
-        "delete_files": len(dels),
-        "rewritten_files": len(affected),
+        "delete_files": snap.summary["folded-delete-files"],
+        "rewritten_files": snap.summary["rewritten-files"],
         "written_files": len(new_entries),
         "written_rows": sum(e.record_count for e in new_entries),
     }
     if lineage is not None:
-        lineage.plan(stage, {"fold": {"deletes": len(dels)}})
-        lineage.mark_done(stage, "fold", snapshot_id=snap.snapshot_id)
-        lineage.set_stage_snapshot(stage, snap.snapshot_id)
+        lineage.complete(stage, "fold", snap.snapshot_id, new_entries)
     return metrics
+
+
+def _fold_rewrite(table: Table, aff_entries: list, key: str, target_file_size: int) -> list:
+    """Rewrite ``aff_entries`` with the live deletes applied, one output
+    group per input file."""
+    # scan applies the deletes; only affected files are read + rewritten.
+    # FILE-PRESERVING rewrite: each affected file already covers a
+    # tight key range (outputs are range-partitioned everywhere), and
+    # dropping deleted rows never widens it — so each input file maps
+    # to one output group via a broadcast path→group join and the
+    # write needs NO shuffle at all (the delete anti-join broadcasts
+    # its tiny side too, so the whole fold is one map-side pass).
+    # The previous repartitionByRange(key) plan both shuffled the
+    # full payload AND sampled its child — re-executing the entire
+    # scan+anti-join a second time just to find boundaries.
+    survivors = table.scan(entries=aff_entries, file_col="__file")
+    plan_rows = [
+        (table.abs_entry_path(e), i) for i, e in enumerate(aff_entries)
+    ]
+    plan_df = local_df(table.spark, plan_rows, "__file string, __rid int")
+    # LEFT join + loud failure on an unmatched row: if the scan's
+    # file_col and abs_entry_path() normalizations ever disagree
+    # (URI scheme, relative location), an inner join would drop
+    # every row and the replace commit would write EMPTY output
+    # over the affected files — silent data loss. A row-count guard
+    # (compaction's approach) can't distinguish that from deletes
+    # legitimately removing rows, so fail per-row instead.
+    survivors = (
+        survivors.join(F.broadcast(plan_df), "__file", "left")
+        .withColumn(
+            "__rid",
+            F.when(
+                F.col("__rid").isNull(),
+                F.raise_error(
+                    F.concat(
+                        F.lit("fold_deletes: scanned file not in rewrite plan "
+                              "(path normalization mismatch): "),
+                        F.col("__file"),
+                    )
+                ).cast("int"),
+            ).otherwise(F.col("__rid")),
+        )
+        .drop("__file")
+    )
+    aff_bytes = sum(e.file_size_bytes for e in aff_entries)
+    aff_rows = sum(e.record_count for e in aff_entries) or 1
+    roll_rows = max(1, int(target_file_size / max(1.0, aff_bytes / aff_rows)))
+    return table.write_datafiles(
+        survivors,
+        fanout_col="__rid",
+        num_groups=len(aff_entries),
+        sort_within=[key],
+        max_records_per_file=roll_rows,
+        shuffle=False,
+    )

@@ -61,88 +61,84 @@ def rewrite_payload(
         return {"skipped": True, "snapshot_id": lineage.stage_snapshot(stage)}
     target_file_size = target_file_size or table.target_file_size
 
-    if table.delete_entries():
-        from olake_spark.operators.merge import fold_deletes
+    plan: dict = {}
 
-        fold_deletes(table, target_file_size=target_file_size, lineage=lineage,
-                     stage=f"{stage}-prefold")
+    def attempt(t: Table):
+        # rewritten rows get a newer sequence than any live delete —
+        # fold first (same contract as compact/cluster)
+        from olake_spark.operators.merge import _uniform_hex_key, fold_deletes
 
-    entries = table.entries()
-    selected = [e for e in entries if entry_filter is None or entry_filter(e)]
-    if not selected:
-        return {"mode": "noop", "files": 0, "carried_over": len(entries)}
+        fold_deletes(t, target_file_size=target_file_size)
+        entries = t.entries()
+        selected = plan["selected"] = [
+            e for e in entries if entry_filter is None or entry_filter(e)
+        ]
+        plan["carried_over"] = len(entries) - len(selected)
+        if not selected:
+            return None
 
-    df = table.scan(entries=selected)
-    schema = df.schema
-    if predicate:
-        # null-safe split: a NULL predicate row passes through rather
-        # than silently vanishing from both branches
-        p = F.expr(predicate)
-        to_fix = df.filter(p.eqNullSafe(F.lit(True)))
-        keep = df.filter(~p.eqNullSafe(F.lit(True)))
-    else:
-        to_fix, keep = df, None
+        df = t.scan(entries=selected)
+        schema = df.schema
+        if predicate:
+            # null-safe split: a NULL predicate row passes through rather
+            # than silently vanishing from both branches
+            p = F.expr(predicate)
+            to_fix = df.filter(p.eqNullSafe(F.lit(True)))
+            keep = df.filter(~p.eqNullSafe(F.lit(True)))
+        else:
+            to_fix, keep = df, None
 
-    fixed = to_fix.mapInPandas(
-        lambda batches: (batch_fn(p) for p in batches), schema
-    )
-    out = fixed.unionByName(keep) if keep is not None else fixed
-
-    total_bytes = sum(e.file_size_bytes for e in selected)
-    total_rows = sum(e.record_count for e in selected) or 1
-    bytes_per_row = total_bytes / total_rows
-    n_files = max(1, math.ceil(total_bytes / target_file_size))
-    roll_rows = max(1, int(target_file_size / bytes_per_row))
-
-    ident = table.meta.identifier_fields[0] if table.meta.identifier_fields else "clip_id"
-    from olake_spark.operators.merge import _uniform_hex_key
-
-    if _uniform_hex_key(table, ident):
-        rid = (
-            F.conv(F.substring(F.col(ident), 1, 4), 16, 10).cast("long")
-            * n_files / 65536
-        ).cast("int")
-        new_entries = table.write_datafiles(
-            out.withColumn("__rid", rid),
-            fanout_col="__rid",
-            num_groups=n_files,
-            sort_within=[ident],
-            max_records_per_file=roll_rows,
+        fixed = to_fix.mapInPandas(
+            lambda batches: (batch_fn(p) for p in batches), schema
         )
-    else:
-        new_entries = table.write_datafiles(
-            out,
-            range_partition_cols=[ident],
-            num_groups=n_files,
-            max_records_per_file=roll_rows,
-        )
-    snap = table.commit_replace(
-        {e.path for e in selected},
-        new_entries,
-        operation=stage,
-        summary={"rewritten-files": len(selected),
-                 "carried-over": len(entries) - len(selected)},
-    )
+        out = fixed.unionByName(keep) if keep is not None else fixed
+
+        total_bytes = sum(e.file_size_bytes for e in selected)
+        total_rows = sum(e.record_count for e in selected) or 1
+        bytes_per_row = total_bytes / total_rows
+        n_files = max(1, math.ceil(total_bytes / target_file_size))
+        roll_rows = max(1, int(target_file_size / bytes_per_row))
+
+        ident = t.meta.identifier_fields[0] if t.meta.identifier_fields else "clip_id"
+        if _uniform_hex_key(t, ident):
+            rid = (
+                F.conv(F.substring(F.col(ident), 1, 4), 16, 10).cast("long")
+                * n_files / 65536
+            ).cast("int")
+            new_entries = t.write_datafiles(
+                out.withColumn("__rid", rid),
+                fanout_col="__rid",
+                num_groups=n_files,
+                sort_within=[ident],
+                max_records_per_file=roll_rows,
+            )
+        else:
+            new_entries = t.write_datafiles(
+                out,
+                range_partition_cols=[ident],
+                num_groups=n_files,
+                max_records_per_file=roll_rows,
+            )
+        return {e.path for e in selected}, new_entries, {
+            "operation": stage,
+            "summary": {"rewritten-files": len(selected), "carried-over": plan["carried_over"]},
+        }
+
+    done = table.rewrite(attempt)
+    if done is None:
+        return {"mode": "noop", "files": 0, "carried_over": plan["carried_over"]}
+    snap, new_entries = done
     metrics = {
         "mode": "rewrite",
         "snapshot_id": snap.snapshot_id,
-        "files_in": len(selected),
+        "files_in": len(plan["selected"]),
         "files_out": len(new_entries),
-        "carried_over": len(entries) - len(selected),
-        "bytes_in": total_bytes,
+        "carried_over": plan["carried_over"],
+        "bytes_in": sum(e.file_size_bytes for e in plan["selected"]),
         "rows": sum(e.record_count for e in new_entries),
     }
     if lineage is not None:
-        lineage.plan(stage, {"rewrite_payload": {"files_in": len(selected)}})
-        lineage.mark_done(
-            stage,
-            "rewrite_payload",
-            files=len(new_entries),
-            rows=metrics["rows"],
-            bytes_=sum(e.file_size_bytes for e in new_entries),
-            snapshot_id=snap.snapshot_id,
-        )
-        lineage.set_stage_snapshot(stage, snap.snapshot_id)
+        lineage.complete(stage, "rewrite_payload", snap.snapshot_id, new_entries)
     return metrics
 
 

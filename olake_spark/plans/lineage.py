@@ -95,6 +95,21 @@ class LineageManifest:
             }
             self._save()
 
+    def complete(self, stage: str, unit_id: str, snapshot_id: int, entries) -> None:
+        """A single-unit stage committed ``snapshot_id``, writing the
+        manifest ``entries``: plan the unit, mark it done with their
+        files/rows/bytes and record the stage snapshot."""
+        self.plan(stage, {unit_id: {}})
+        self.mark_done(
+            stage,
+            unit_id,
+            files=len(entries),
+            rows=sum(e.record_count for e in entries),
+            bytes_=sum(e.file_size_bytes for e in entries),
+            snapshot_id=snapshot_id,
+        )
+        self.set_stage_snapshot(stage, snapshot_id)
+
     def stage_snapshot(self, stage: str) -> int | None:
         return self._stage(stage)["snapshot_id"]
 

@@ -54,10 +54,9 @@ import pyarrow as pa
 import pyarrow.compute as pc
 
 from olake_spark.functions.hashing import mmh3_32_packed, pack_binary
-from olake_spark.table.fsio import fs_for, map_files
+from olake_spark.table.fsio import SIDECAR_SUFFIX, fs_for, map_files
 
 MAGIC = b"OLBF1\n"
-SIDECAR_SUFFIX = ".bloom"
 _SEED1 = 0
 _SEED2 = 0x9747B28C
 #: widest bloom we will build: 2^27 bits = 16 MiB (a ~14M-key file at
@@ -279,15 +278,6 @@ def read_sidecar(abs_data_path: str, fs=None) -> bytes | None:
             return f.read()
     except (FileNotFoundError, OSError):
         return None
-
-
-def delete_sidecar(abs_data_path: str, fs=None) -> None:
-    if fs is None:
-        fs, abs_data_path = fs_for(abs_data_path)
-    try:
-        fs.delete_file(sidecar_path(abs_data_path))
-    except (FileNotFoundError, OSError):
-        pass
 
 
 # -------------------------------------------------------------- probe

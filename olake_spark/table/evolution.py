@@ -208,26 +208,26 @@ def evolve(table, batch_schema: T.StructType, allow_refresh: bool = False):
     needs_rewrite = allow_refresh and any(
         (old, new) not in _ALLOWED_PROMOTIONS for old, new in diff.promotions.values()
     )
-    new_schema = evolved_schema(table.schema, diff)
-    old_entries = table.data_entries() if needs_rewrite else []
-    if old_entries:
-        casted = align_batch(table.scan(), new_schema)
-        new_entries = table.write_datafiles(casted)
-        removed = {e.path for e in old_entries} | {
-            e.path for e in table.delete_entries()
-        }
-        table.commit_replace(
-            removed,
-            new_entries,
-            operation="refresh-schema",
-            summary={"refreshed-columns": list(diff.promotions)},
-            schema_json=new_schema.json(),
-        )
+    if needs_rewrite and table.data_entries():
+
+        def attempt(t):
+            # re-derived per attempt, like the metadata-only path below
+            target = evolved_schema(t.schema, resolve(t.schema))
+            entries = t.entries()
+            new_entries = t.write_datafiles(align_batch(t.scan(), target))
+            return {e.path for e in entries}, new_entries, {
+                "operation": "refresh-schema",
+                "summary": {"refreshed-columns": list(diff.promotions)},
+                "schema_json": target.json(),
+            }
+
+        table.rewrite(attempt)
     else:
         # metadata-only: re-derive the diff against the refreshed
         # schema on every retry (no lost concurrent schema commits)
         table.update_schema(
-            new_schema, rebuild=lambda cur: evolved_schema(cur, resolve(cur))
+            evolved_schema(table.schema, diff),
+            rebuild=lambda cur: evolved_schema(cur, resolve(cur)),
         )
     return diff
 

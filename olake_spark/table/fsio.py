@@ -29,6 +29,9 @@ from pyarrow import fs as pafs
 #: per-file read is ms-scale and job scheduling would dominate
 DISTRIBUTED_THRESHOLD = 256
 POOL_THREADS = 16
+#: a data file's advisory key-bloom sidecar is ``<file>`` + this
+#: (table/bloom.py)
+SIDECAR_SUFFIX = ".bloom"
 
 
 def fs_for(path: str) -> tuple[pafs.FileSystem, str]:
@@ -51,6 +54,19 @@ def file_size(path: str, fs: pafs.FileSystem | None = None) -> int:
     if info.type == pafs.FileType.NotFound:
         raise FileNotFoundError(path)
     return info.size
+
+
+def remove_file(path: str) -> None:
+    """Best-effort delete of a data file (path or URI) and its bloom
+    sidecar. A file already gone, or one that will not go, is left to
+    the orphan sweep (operators/gc.py): callers only remove files no
+    committed snapshot references."""
+    fs, p = fs_for(path)
+    for f in (p, p + SIDECAR_SUFFIX):
+        try:
+            fs.delete_file(f)
+        except OSError:
+            pass
 
 
 def map_files(spark, items: list, fn, shared=None) -> list:

@@ -6,6 +6,8 @@ table's own commit backend; losers refresh, re-derive, and retry with
 backoff — the Spark-native analog of the reference's Iceberg
 RowDelta/AppendFiles commits (IcebergTableOperator.java:116-169) and
 its retry policy (drivers/abstract/utils.go:11-32, 3 attempts).
+Commits that replace data files go through ``Table.rewrite`` on top of
+it, which re-plans a rewrite that a concurrent commit invalidated.
 
 Data writes go through ``write_datafiles``: one distributed Spark
 write into an immutable per-commit directory, optional fanout column
@@ -696,6 +698,36 @@ class Table:
             f"{what} lost version {new_meta.version} after {COMMIT_RETRIES + 1} attempts"
         )
 
+    def rewrite(self, attempt) -> tuple[Snapshot, list[DataFileEntry]] | None:
+        """The one re-plan loop of every commit that replaces data
+        files; returns the committed snapshot and the entries it added,
+        or None when there was nothing to do.
+
+        Each pass records the current snapshot as its base and calls
+        ``attempt(self)``, which plans against ``self.meta``, writes the
+        new files and returns ``(removed_paths, added, fields)``
+        (``fields``: ``commit_replace`` keywords such as ``operation``)
+        or None. The commit refuses the pass when a removed file is no
+        longer live or a delete file newer than the base is (Iceberg's
+        ``validateFromSnapshot``); a refused pass removes the data files
+        it wrote, with their sidecars, refreshes and plans again.
+        ``COMMIT_RETRIES + 1`` refused passes raise CommitConflict."""
+        for n in range(COMMIT_RETRIES + 1):
+            if n:
+                self.refresh()
+            base = self.meta.current_snapshot_id or 0
+            plan = attempt(self)
+            if plan is None:
+                return None
+            removed, added, fields = plan
+            try:
+                return self.commit_replace(removed, added, base_snapshot_id=base, **fields), added
+            except CommitConflict:
+                for e in added:
+                    fsio.remove_file(self.abs_entry_path(e))
+                if n == COMMIT_RETRIES:
+                    raise
+
     def _commit(
         self,
         build_snapshot,
@@ -748,32 +780,43 @@ class Table:
         summary: dict | None = None,
         schema_json: str | None = None,
         properties: dict | None = None,
-        validate_extra=None,
+        base_snapshot_id: int | None = None,
     ) -> Snapshot:
         """Atomic swap: removed data files out, new files in.
 
         Only manifests that contain a removed path are rewritten;
         untouched manifests are shared with the parent snapshot —
         commit cost scales with the change, not the table.
-        Validation: every removed path must still be live (a concurrent
-        replace of the same file is a real conflict → error, mirroring
-        the reference's LSN-mismatch full-stop guard,
-        drivers/postgres/internal/cdc.go:75-79). ``validate_extra(t)``
-        lets the caller add commit-time invariants that run on every
-        attempt against refreshed metadata (e.g. compaction refusing
-        delete files that landed after its fold); raise CommitConflict
-        to reject. A concurrent commit landing between validation and
-        the version write makes the write LOSE (create-or-fail versioning), so
-        the re-validation after refresh sees it — no unchecked window.
+        Validation, from one ``entries()`` read of the metadata being
+        committed over: every removed path must still be live (a
+        concurrent replace of the same file is a real conflict,
+        mirroring the reference's LSN-mismatch full-stop guard,
+        drivers/postgres/internal/cdc.go:75-79), and no live delete
+        file may be newer than ``base_snapshot_id``, the snapshot the
+        new files were planned against (default: the current one). The
+        added rows get a newer sequence than such a delete, so it would
+        stop removing them. Either raises CommitConflict; file-rewriting
+        operators commit through ``rewrite``, which re-plans. A
+        concurrent commit landing between validation and the version
+        write makes the write LOSE (create-or-fail versioning), so the
+        re-validation after refresh sees it — no unchecked window.
         """
+        if base_snapshot_id is None:
+            base_snapshot_id = self.meta.current_snapshot_id or 0
 
         def validate(t: "Table") -> None:
-            live = t.live_paths()
-            missing = removed_paths - live
+            live = t.entries()
+            missing = removed_paths - {e.path for e in live}
             if missing:
                 raise CommitConflict(f"files no longer live: {sorted(missing)[:5]}")
-            if validate_extra is not None:
-                validate_extra(t)
+            newer = [
+                e.path for e in live
+                if e.content == fmt.CONTENT_DELETES and e.added_snapshot_id > base_snapshot_id
+            ]
+            if newer:
+                raise CommitConflict(
+                    f"delete files committed after snapshot {base_snapshot_id}: {newer[:5]}"
+                )
 
         def build(t: "Table") -> Snapshot:
             seq = t.meta.last_sequence_number + 1

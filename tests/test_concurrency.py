@@ -9,6 +9,7 @@ with catalog-side atomic commits (IcebergTableOperator.java:116-169).
 from __future__ import annotations
 
 import json
+import os
 import subprocess
 import sys
 import time
@@ -87,20 +88,36 @@ def test_ffd_planner_scales_to_200k_files():
 # Without commit-time delete validation the copy/rewrite paths would
 # silently resurrect the deleted rows (the delete gets out-sequenced).
 
+import shutil  # noqa: E402
+
+import pytest  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
+from pyspark.sql import types as T  # noqa: E402
 
 from olake_spark.fixtures.audio_clips import cdc_batch  # noqa: E402
 from olake_spark.operators import compaction as compaction_mod  # noqa: E402
 from olake_spark.operators import merge as merge_mod  # noqa: E402
+from olake_spark.operators.clustering import cluster  # noqa: E402
 from olake_spark.operators.compaction import compact  # noqa: E402
-from olake_spark.operators.merge import fold_deletes, merge_mor  # noqa: E402
+from olake_spark.operators.incremental_cluster import cluster_incremental  # noqa: E402
+from olake_spark.operators.merge import fold_deletes, merge_into, merge_mor  # noqa: E402
+from olake_spark.operators.rewrite_payload import rewrite_payload  # noqa: E402
+from olake_spark.table import format as fmt  # noqa: E402
+from olake_spark.table.evolution import evolve  # noqa: E402
+from olake_spark.table.fsio import SIDECAR_SUFFIX  # noqa: E402
+from olake_spark.table.table import COMMIT_RETRIES, CommitConflict  # noqa: E402
 
 RACE_N = 120
+#: the one base table every race case copies (built once per module)
+_BASE: dict = {}
 
 
-def _race_table(spark, path):
+@pytest.fixture(scope="module", autouse=True)
+def _race_base(spark, tmp_path_factory):
+    path = str(tmp_path_factory.mktemp("race") / "base")
     t = Table.create(
-        spark, path, "audio_clips", FULL_SCHEMA, identifier_fields=["_olake_id"]
+        spark, path, "audio_clips", FULL_SCHEMA, identifier_fields=["_olake_id"],
+        properties={"write.bloom.column": "_olake_id"},
     )
     # fragmented appends -> several small files, all compaction-eligible
     for w in range(2):
@@ -110,7 +127,14 @@ def _race_table(spark, path):
                 "clip_id", F.concat(F.lit("x_"), F.col("clip_id"))
             ).withColumn("_olake_id", F.md5(F.col("clip_id")))
         t.commit_append(t.write_datafiles(df, range_partition_cols=["_olake_id"], num_groups=3))
-    return t
+    _BASE["path"] = path
+    yield
+    _BASE.clear()
+
+
+def _race_table(spark, path):
+    shutil.copytree(_BASE["path"], path)
+    return Table.load(spark, path)
 
 
 def _content(t):
@@ -121,24 +145,23 @@ def _content(t):
 
 
 def _assert_no_orphans(t):
-    """Every parquet on disk must be referenced by SOME committed
-    snapshot — a conflicted (retried) attempt must clean up the outputs
-    it never committed."""
-    import os as _os
-
-    from olake_spark.table import format as fmt
-
+    """Every parquet (and bloom sidecar) on disk must belong to SOME
+    committed snapshot — a conflicted (retried) attempt must clean up
+    the outputs it never committed."""
     committed = set()
     for s in t.meta.snapshots:
         for m in s.manifests:
             committed.update(e.path for e in fmt.read_manifest(t.location, m))
-    on_disk = set()
-    data_root = _os.path.join(t.location, "data")
-    for root, _dirs, files in _os.walk(data_root):
+    orphans = []
+    data_root = os.path.join(t.location, "data")
+    for root, _dirs, files in os.walk(data_root):
         for f in files:
-            if f.endswith(".parquet"):
-                on_disk.add(_os.path.relpath(_os.path.join(root, f), t.location))
-    orphans = on_disk - committed
+            rel = os.path.relpath(os.path.join(root, f), t.location)
+            if f.endswith(".parquet") and rel not in committed:
+                orphans.append(rel)
+            # a key-bloom sidecar belongs to the data file it names
+            if f.endswith(SIDECAR_SUFFIX) and rel[: -len(SIDECAR_SUFFIX)] not in committed:
+                orphans.append(rel)
     assert not orphans, f"orphan files from conflicted attempts: {sorted(orphans)[:5]}"
 
 
@@ -199,3 +222,109 @@ def test_fold_mid_fold_delete_race(spark, tmp_path, monkeypatch):
     assert raced.delete_entries() == []  # retry folded BOTH batches
     assert _content(raced) == _content(control)
     _assert_no_orphans(raced)
+
+
+# ------------------------------------------------------- every rewriter
+# Each operator that replaces data files commits through Table.rewrite.
+# A merge_mor landing at its first data write must be refused (its
+# delete is newer than the snapshot the operator read) and re-planned
+# around; without that the rewritten rows out-sequence the delete and
+# its keys come back, or show up twice.
+
+
+def _newcomers(spark, t):
+    df = generate_clips(spark, 20, partitions=2).withColumn(
+        "clip_id", F.concat(F.lit("n_"), F.col("clip_id"))
+    ).withColumn("_olake_id", F.md5(F.col("clip_id")))
+    t.commit_append(t.write_datafiles(df))
+
+
+_REWRITERS = {
+    "merge_into": (
+        None,
+        lambda spark, t: merge_into(
+            t, cdc_batch(spark, RACE_N // 2, 2, updates=4, deletes=4, inserts=2)
+        ),
+    ),
+    "cluster": (None, lambda spark, t: cluster(t)),
+    "cluster_incremental": (
+        lambda spark, t: (cluster(t), _newcomers(spark, t)),
+        lambda spark, t: cluster_incremental(t),
+    ),
+    "rewrite_payload": (
+        None,
+        lambda spark, t: rewrite_payload(
+            # a lambda ships to the Python workers by value
+            t, lambda pdf: pdf.assign(transcript=pdf["transcript"] + " fixed")
+        ),
+    ),
+    "evolve_refresh": (
+        None,
+        lambda spark, t: evolve(
+            t,
+            T.StructType([T.StructField("sr_hz", T.StringType(), True)]),
+            allow_refresh=True,
+        ),
+    ),
+    "fold_deletes": (
+        lambda spark, t: merge_mor(
+            t, cdc_batch(spark, RACE_N // 2, 3, updates=3, deletes=3, inserts=1)
+        ),
+        lambda spark, t: fold_deletes(t),
+    ),
+}
+
+
+@pytest.mark.parametrize("op", sorted(_REWRITERS))
+def test_rewriter_replans_around_racing_delete(spark, tmp_path, monkeypatch, op):
+    setup, run = _REWRITERS[op]
+    raced = _race_table(spark, str(tmp_path / "raced"))
+    control = _race_table(spark, str(tmp_path / "control"))
+    batch = cdc_batch(spark, RACE_N // 2, 1, updates=4, deletes=4, inserts=2)
+    if setup is not None:
+        setup(spark, raced)
+        setup(spark, control)
+
+    # control: the racing batch lands before the operator starts
+    merge_mor(control, batch)
+    run(spark, control)
+
+    real_write = Table.write_datafiles
+    fired = {"n": 0}
+
+    def inject_then_write(self, df, *a, **kw):
+        if fired["n"] == 0 and kw.get("content", fmt.CONTENT_DATA) == fmt.CONTENT_DATA:
+            fired["n"] += 1
+            # a concurrent writer (fresh handle) commits mid-operator
+            merge_mor(Table.load(spark, raced.location), batch)
+        return real_write(self, df, *a, **kw)
+
+    monkeypatch.setattr(Table, "write_datafiles", inject_then_write)
+    run(spark, raced)
+    monkeypatch.setattr(Table, "write_datafiles", real_write)
+
+    assert fired["n"] == 1
+    keys = [r["_olake_id"] for r in raced.scan().select("_olake_id").collect()]
+    assert len(keys) == len(set(keys)), "a key appears twice"
+    assert _content(raced) == _content(control)
+    _assert_no_orphans(raced)
+
+
+def test_rewrite_gives_up_after_bounded_replans(spark, tmp_path):
+    """An attempt whose commit always conflicts is planned exactly
+    COMMIT_RETRIES + 1 times, and no plan's files stay behind."""
+    t = _race_table(spark, str(tmp_path / "t"))
+    plans = []
+
+    def attempt(t):
+        plans.append(t.meta.current_snapshot_id)
+        added = t.write_datafiles(generate_clips(spark, 5, partitions=1))
+        assert all(os.path.exists(t.abs_entry_path(e) + SIDECAR_SUFFIX) for e in added)
+        # removing a file that is not live is refused on every commit
+        return {"data/never-live.parquet"}, added, {"operation": "test"}
+
+    with pytest.raises(CommitConflict):
+        t.rewrite(attempt)
+    assert len(plans) == COMMIT_RETRIES + 1
+    assert Table.load(spark, t.location).meta.current_snapshot_id == plans[0]
+    _assert_no_orphans(t)
