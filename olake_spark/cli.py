@@ -120,14 +120,10 @@ def cmd_check(cfg: dict) -> dict:
     """Config + connectivity + write-probe validation."""
     from olake_spark.plans.filters import parse_filter
 
+    ops = JOB_SPEC["properties"]["stages"]["items"]["properties"]["op"]["enum"]
     errors = []
     for s in cfg.get("stages", []):
-        if s.get("op") not in (
-            "append", "cdc_merge", "merge", "merge_mor", "fold_deletes",
-            "compact", "cluster", "cluster_incremental",
-            "resample", "rewrite_manifests", "expire", "gc_orphans",
-            "rollback", "build_blooms", "auto",
-        ):
+        if s.get("op") not in ops:
             errors.append(f"unknown op {s.get('op')!r}")
         if s.get("op") in ("append", "cdc_merge", "merge", "merge_mor") and not s.get(
             "source_dir"

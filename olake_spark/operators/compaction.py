@@ -1,12 +1,14 @@
-"""Bin-packing compaction: FFD planner → broadcast plan → fanout rewrite.
+"""Bin-packing compaction: FFD planner → file→bin tags → fanout rewrite.
 
 Small files are grouped per table-partition into ~target-size bins by
-the greedy first-fit-decreasing planner (plans/ffd.py). The plan (a
-file→bin map) is broadcast-joined against the scanned rows'
-``_metadata.file_path``, the rows are repartitioned on the bin id, and
-each bin is written as exactly one output file — one distributed Spark
-job for the whole plan, no per-bin driver loop (at 10^5 bins a
-job-per-bin would be a scheduler DoS).
+the greedy first-fit-decreasing planner (plans/ffd.py). Bins are
+written by a pyarrow row-group copy where the inputs allow it
+(``_copy_bins``), else by Spark (``_rewrite_bins``): the scan tags every
+row with its file's bin id (``Table.scan(tags=...)``, one broadcast
+join that raises on a row of no planned file), the rows are
+repartitioned on the bin id, and each bin is written as exactly one
+output file — one distributed Spark job for the whole plan, no per-bin
+driver loop (at 10^5 bins a job-per-bin would be a scheduler DoS).
 
 Reference parity: target data file size 512 MiB
 (arrow-writer/utils.go:22, rolling writer writer.go:195-222); our
@@ -21,11 +23,8 @@ import os
 import uuid
 from collections import defaultdict
 
-from pyspark.sql import functions as F
-
 from olake_spark.plans.ffd import Bin, first_fit_decreasing
 from olake_spark.plans.lineage import LineageManifest
-from olake_spark.session import local_df
 from olake_spark.table.format import DataFileEntry
 from olake_spark.table.stats import file_entry
 from olake_spark.table.table import Table
@@ -63,7 +62,7 @@ def _copy_bins(table: Table, bins: list[Bin], entry_by_path: dict[str, DataFileE
     no Spark row conversion, no shuffle, no JVM in the byte path.
 
     Compaction is pure data movement (the bin plan fixes the output
-    grouping before any byte is read), so the Spark scan→broadcast-join
+    grouping before any byte is read), so the Spark tagged-scan
     →fanout-write plan of ``_rewrite_bins`` pays for machinery it does
     not need: every payload byte crosses parquet→InternalRow→shuffle
     writer→parquet. Here the byte path is parquet→Arrow→parquet inside
@@ -264,20 +263,12 @@ def _copy_bins(table: Table, bins: list[Bin], entry_by_path: dict[str, DataFileE
 
 
 def _rewrite_bins(table: Table, bins: list[Bin], entry_by_path: dict[str, DataFileEntry]):
-    """One Spark job: read all binned files, broadcast-map file→bin,
-    fanout-write one file per bin."""
+    """One Spark job: read all binned files, each tagged with its bin
+    (scan's ``tags``), fanout-write one file per bin."""
     paths = [p for b in bins for p, _ in b.items]
     src_entries = [entry_by_path[p] for p in paths]
-    # file identity rides in via scan's file_col (normalized absolute
-    # path — never the basename, which collides across fanout dirs)
-    df = table.scan(entries=src_entries, file_col="__file")
-    rows = [
-        (table.abs_entry_path(entry_by_path[p]), b.bin_id)
-        for b in bins
-        for p, _ in b.items
-    ]
-    plan_df = local_df(table.spark, rows, f"__file string, {FANOUT_COL} int")
-    binned = df.join(F.broadcast(plan_df), "__file", "inner").drop("__file")
+    bin_of = {p: b.bin_id for b in bins for p, _ in b.items}
+    binned = table.scan(entries=src_entries, tags={FANOUT_COL: bin_of})
     key = table.meta.identifier_fields[0] if table.meta.identifier_fields else None
     # per-file roll budget from observed bytes/row (W4): a bin whose
     # input stats underestimated its size still rolls at the target
@@ -292,8 +283,7 @@ def _rewrite_bins(table: Table, bins: list[Bin], entry_by_path: dict[str, DataFi
         max_records_per_file=roll_rows,
     )
     # a rewrite must carry every input row — abort BEFORE the replace
-    # commit if the plan join dropped anything (path normalization bugs
-    # would otherwise silently delete data)
+    # commit if the scan dropped any (e.g. a delete it applied)
     expected = sum(entry_by_path[p].record_count for p in paths)
     got = sum(e.record_count for e in new_entries)
     if got != expected:
@@ -366,8 +356,8 @@ def compact(
 
     mode: "auto" (default) uses the pyarrow row-group COPY path
     (`_copy_bins` — one task per bin, no shuffle, no JVM byte path)
-    since deletes are always folded first; "spark" forces the scan→
-    broadcast-join→fanout rewrite (`_rewrite_bins`). Both paths feed
+    since deletes are always folded first; "spark" forces the
+    tagged-scan→fanout rewrite (`_rewrite_bins`). Both paths feed
     the same footer-stats harvest and the same replace commit, and the
     pre-commit row-count guard holds for both."""
     if mode not in ("auto", "spark"):

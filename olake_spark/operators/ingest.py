@@ -76,7 +76,6 @@ def append_batch(
         entries = table.write_datafiles(
             df,
             partition_by=part_names,
-            record_partition_from_dir=True,
             sort_within=[ident],
         )
         for e in entries:

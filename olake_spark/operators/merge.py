@@ -604,42 +604,17 @@ def _fold_rewrite(table: Table, aff_entries: list, key: str, target_file_size: i
     # scan applies the deletes; only affected files are read + rewritten.
     # FILE-PRESERVING rewrite: each affected file already covers a
     # tight key range (outputs are range-partitioned everywhere), and
-    # dropping deleted rows never widens it — so each input file maps
-    # to one output group via a broadcast path→group join and the
-    # write needs NO shuffle at all (the delete anti-join broadcasts
-    # its tiny side too, so the whole fold is one map-side pass).
-    # The previous repartitionByRange(key) plan both shuffled the
-    # full payload AND sampled its child — re-executing the entire
-    # scan+anti-join a second time just to find boundaries.
-    survivors = table.scan(entries=aff_entries, file_col="__file")
-    plan_rows = [
-        (table.abs_entry_path(e), i) for i, e in enumerate(aff_entries)
-    ]
-    plan_df = local_df(table.spark, plan_rows, "__file string, __rid int")
-    # LEFT join + loud failure on an unmatched row: if the scan's
-    # file_col and abs_entry_path() normalizations ever disagree
-    # (URI scheme, relative location), an inner join would drop
-    # every row and the replace commit would write EMPTY output
-    # over the affected files — silent data loss. A row-count guard
-    # (compaction's approach) can't distinguish that from deletes
-    # legitimately removing rows, so fail per-row instead.
-    survivors = (
-        survivors.join(F.broadcast(plan_df), "__file", "left")
-        .withColumn(
-            "__rid",
-            F.when(
-                F.col("__rid").isNull(),
-                F.raise_error(
-                    F.concat(
-                        F.lit("fold_deletes: scanned file not in rewrite plan "
-                              "(path normalization mismatch): "),
-                        F.col("__file"),
-                    )
-                ).cast("int"),
-            ).otherwise(F.col("__rid")),
-        )
-        .drop("__file")
-    )
+    # dropping deleted rows never widens it — so each input file is
+    # tagged with its own output group (scan's ``tags``: one broadcast
+    # join that raises on a row of no planned file, where dropping it
+    # would write EMPTY output over the affected files) and the write
+    # needs NO shuffle at all (the delete anti-join broadcasts its tiny
+    # side too, so the whole fold is one map-side pass). The previous
+    # repartitionByRange(key) plan both shuffled the full payload AND
+    # sampled its child — re-executing the entire scan+anti-join a
+    # second time just to find boundaries.
+    rid = {e.path: i for i, e in enumerate(aff_entries)}
+    survivors = table.scan(entries=aff_entries, tags={"__rid": rid})
     aff_bytes = sum(e.file_size_bytes for e in aff_entries)
     aff_rows = sum(e.record_count for e in aff_entries) or 1
     roll_rows = max(1, int(target_file_size / max(1.0, aff_bytes / aff_rows)))

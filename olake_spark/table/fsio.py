@@ -69,6 +69,17 @@ def remove_file(path: str) -> None:
             pass
 
 
+def remove_dir(path: str) -> None:
+    """Best-effort recursive delete of a directory (path or URI) that no
+    committed snapshot references; one that will not go is left to the
+    orphan sweep."""
+    fs, p = fs_for(path)
+    try:
+        fs.delete_dir(p)
+    except OSError:
+        pass
+
+
 def map_files(spark, items: list, fn, shared=None) -> list:
     """``[fn(item, shared) for item in items]``, in input order.
 

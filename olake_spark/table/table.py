@@ -24,12 +24,13 @@ import dataclasses
 import glob
 import json
 import os
+import re
 import time
 import uuid
 
 import pyarrow as pa
 import pyarrow.parquet as papq
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
@@ -65,19 +66,26 @@ COMMIT_BACKOFF_S = 0.2
 DRIVER_DELETE_KEY_CAP = 50_000
 
 
-def _fpath_col() -> Column:
-    """Normalized absolute path of each row's source parquet file:
-    ``_metadata.file_path`` with the URI scheme (``file:/``,
-    ``file:///``) stripped to a plain absolute path.
+#: characters java.net.URI keeps as they are in a path component
+#: (RFC 2396 unreserved, pchar punctuation, ``;`` and ``/``); ``%`` is
+#: not among them
+_URI_PATH_ESCAPED = re.compile(r"[^A-Za-z0-9\-_.!~*'();/:@&=+$,]")
 
-    ALWAYS key file-identity joins on this FULL path, never on the
-    part-file basename: a partitionBy fanout write reuses one task's
-    filename in every partition directory (``__rid=0/part-00000-X``,
-    ``__rid=1/part-00000-X``, ...), so basenames collide even within a
-    single commit — a basename-keyed broadcast join silently multiplies
-    rows.
-    """
-    return F.regexp_replace(F.col("_metadata.file_path"), "^[a-z][a-z0-9+.-]*:/+", "/")
+
+def _uri_path(path: str) -> str:
+    """``path`` spelled as Hadoop ``Path(path).toUri()`` spells it, which
+    is the spelling of Spark's ``_metadata.file_path``: java.net.URI
+    quotes each character outside its path set as UTF-8 ``%XX``, except
+    a non-ASCII one that is neither a space nor a control character,
+    which it keeps."""
+
+    def quote(m: re.Match) -> str:
+        c = m.group()
+        if c > "\x9f" and not c.isspace():
+            return c
+        return "".join(f"%{b:02X}" for b in c.encode())
+
+    return _URI_PATH_ESCAPED.sub(quote, path)
 
 
 class CommitConflict(Exception):
@@ -194,9 +202,9 @@ class Table:
         return {e.path for e in self.entries(snapshot_id)}
 
     def abs_entry_path(self, e: DataFileEntry) -> str:
-        """Absolute filesystem path of a manifest entry, normalized to
-        match ``_fpath_col()`` — the one true join key for mapping scan
-        rows back to manifest entries (never the basename)."""
+        """Absolute filesystem path of a manifest entry (sidecars,
+        removal, the compaction copy path; ``_read_tagged`` derives its
+        join key from it)."""
         return os.path.normpath(os.path.join(self.location, e.path))
 
     # ------------------------------------------------------------ scans
@@ -206,16 +214,15 @@ class Table:
         snapshot_id: int | None = None,
         entries: list[DataFileEntry] | None = None,
         apply_deletes: bool = True,
-        file_col: str | None = None,
+        tags: dict[str, dict[str, int]] | None = None,
     ) -> DataFrame:
         """Snapshot-isolated read: resolve the file list at plan time.
 
-        ``file_col``: attach the source file's normalized absolute
-        path under this column name (from ``_metadata.file_path``,
-        which is only resolvable directly on the parquet relation) —
-        callers like ``fold_deletes`` and ``compact`` join it against
-        ``abs_entry_path`` to map rows back to manifest entries without
-        a per-file union scan.
+        ``tags``: ``{column: {entry path: value}}``, one integer per
+        selected data file for each named column, attached to every row
+        of that file as a long (``_read_tagged``: a row of no selected
+        file raises). ``fold_deletes`` and ``compact`` tag each input
+        file with its output group this way.
 
         Filters/projections applied by the caller on the returned
         DataFrame still push down to the parquet scans (Catalyst sees a
@@ -231,52 +238,88 @@ class Table:
         pruned CoW rewrite of a MoR table still sees post-delete rows),
         and only those newer than the oldest selected data file are
         kept. With none left the scan is the plain multi-file read, no
-        join; otherwise ``_anti_join_deletes`` applies the rest.
+        join; otherwise the read also tags each row with its file's
+        sequence ``__seq`` and ``_anti_join_deletes`` applies the rest.
         """
         if entries is None:
             entries = self.entries(snapshot_id)
         data = [e for e in entries if e.content != fmt.CONTENT_DELETES]
-        paths = [os.path.join(self.location, e.path) for e in data]
-        if not paths:
-            df = local_df(self.spark, [], self.schema)
-            if file_col is not None:
-                df = df.withColumn(file_col, F.lit(None).cast("string"))
-            return df
-        df = self.spark.read.schema(self.schema).parquet(*paths)
-        if file_col is not None:
-            df = df.withColumn(file_col, _fpath_col())
-        if not apply_deletes:
-            return df
-        dels = self.delete_entries(snapshot_id)
-        live = {d.path for d in dels}
-        self._delete_keys = {p: k for p, k in self._delete_keys.items() if p in live}
-        oldest = min(e.added_snapshot_id for e in data)
-        dels = [d for d in dels if d.added_snapshot_id > oldest]
-        if not dels:
-            return df
-        return self._anti_join_deletes(df, data, dels)
+        tags = dict(tags or {})
+        dels = []
+        if apply_deletes and data:
+            dels = self.delete_entries(snapshot_id)
+            live = {d.path for d in dels}
+            self._delete_keys = {p: k for p, k in self._delete_keys.items() if p in live}
+            oldest = min(e.added_snapshot_id for e in data)
+            dels = [d for d in dels if d.added_snapshot_id > oldest]
+        if dels:
+            tags["__seq"] = {e.path: e.added_snapshot_id for e in data}
+        df = self._read_tagged(data, self.schema, tags)
+        return self._anti_join_deletes(df, dels) if dels else df
 
-    def _anti_join_deletes(
-        self,
-        df: DataFrame,
-        data: list[DataFileEntry],
-        dels: list[DataFileEntry],
+    def _read_tagged(
+        self, entries: list[DataFileEntry], schema: T.StructType, tags: dict[str, dict[str, int]]
     ) -> DataFrame:
-        """Scan-side application of the equality deletes ``dels``: an
-        anti-join on ``key == __d_key AND __seq < __dseq``, where
-        ``__seq`` is the row's data-file sequence and the delete side
-        holds each deleted key once with its newest delete sequence
-        ``__dseq``. The join is an equi-join on the key with the strict
-        sequence comparison as a residual condition, never a nested
-        loop.
+        """The one per-file tagging read: ``entries`` as ONE multi-file
+        parquet relation under ``schema`` (never a per-file union), plus
+        a long column per tag holding ``tags[column][e.path]`` on every
+        row of file ``e``.
 
-        ``__seq``: a literal when every selected data file shares one
-        sequence number; otherwise a tiny broadcast map (normalized
-        file path → the entry's added_snapshot_id) joined on
-        ``_metadata.file_path``, so the big data scan stays ONE
-        multi-file parquet relation — no per-file union. That join key
-        is the FULL path (see ``_fpath_col``): basenames collide across
-        fanout-written partition directories.
+        A tag with the same value for every file is a literal: no join,
+        no Spark job. The others ride one broadcast join of a
+        driver-built ``(file key, tag...)`` table on the row's
+        ``_metadata.file_path`` (only resolvable on the parquet relation
+        itself). The file key is Spark's own spelling of the FULL path,
+        never the basename (a partitionBy fanout write reuses one task's
+        file name in every partition directory): Hadoop's
+        ``Path(abs).toUri()`` on the table side, computed in Python by
+        ``_uri_path`` (a space becomes ``%20``, ``%`` ``%25`` and ``#``
+        ``%23``), and ``file_path`` with its scheme stripped on the row
+        side. A row whose file matches no key raises: a rewrite would
+        lose it and a scan would let it outlive its deletes.
+        """
+        tag_fields = [T.StructField(c, T.LongType()) for c in tags]
+        if not entries:
+            return local_df(self.spark, [], T.StructType(schema.fields + tag_fields))
+        df = self.spark.read.schema(schema).parquet(
+            *[os.path.join(self.location, e.path) for e in entries]
+        )
+        joined = []
+        for f in tag_fields:
+            values = {tags[f.name][e.path] for e in entries}
+            if len(values) == 1:
+                df = df.withColumn(f.name, F.lit(values.pop()).cast("long"))
+            else:
+                joined.append(f)
+        if not joined:
+            return df
+
+        plan = local_df(
+            self.spark,
+            [
+                (_uri_path(self.abs_entry_path(e)), *[tags[f.name][e.path] for f in joined])
+                for e in entries
+            ],
+            T.StructType([T.StructField("__file_key", T.StringType())] + joined),
+        )
+        row_key = F.regexp_replace(F.col("_metadata.file_path"), "^[a-z][a-z0-9+.-]*:/+", "/")
+        df = df.withColumn("__file_key", row_key).join(F.broadcast(plan), "__file_key", "left")
+        unmatched = F.raise_error(
+            F.concat(F.lit("scanned file not in the tagging plan: "), F.col("__file_key"))
+        ).cast("long")
+        for f in joined:
+            tag = F.col(f.name)
+            df = df.withColumn(f.name, F.when(tag.isNull(), unmatched).otherwise(tag))
+        return df.drop("__file_key")
+
+    def _anti_join_deletes(self, df: DataFrame, dels: list[DataFileEntry]) -> DataFrame:
+        """Scan-side application of the equality deletes ``dels`` to
+        ``df``, whose rows carry their data file's sequence ``__seq``:
+        an anti-join on ``key == __d_key AND __seq < __dseq``, where the
+        delete side holds each deleted key once with its newest delete
+        sequence ``__dseq``. The join is an equi-join on the key with
+        the strict sequence comparison as a residual condition, never a
+        nested loop.
 
         Delete side: up to ``DRIVER_DELETE_KEY_CAP`` delete records
         (manifest ``record_count``), the driver reads the delete files'
@@ -287,25 +330,15 @@ class Table:
         shuffle of the data scan), and lets Catalyst push a lookup's
         ``key = k`` into it: when ``k`` was never deleted that side
         folds to empty and the anti-join disappears. Above the cap the
-        same side is a Spark read of the applicable delete files: the
-        driver's per-scan cost (group, hand over and plan a LocalRelation
-        of every key) grows with the keys, the Spark read's barely. A
-        delete side above ``autoBroadcastJoinThreshold`` falls back to
-        a sort-merge anti-join.
+        same side is a tagged Spark read of the applicable delete files
+        (``__dseq`` per file): the driver's per-scan cost (group, hand
+        over and plan a LocalRelation of every key) grows with the keys,
+        the Spark read's barely. A delete side above
+        ``autoBroadcastJoinThreshold`` falls back to a sort-merge
+        anti-join.
         """
         id_fields = self.meta.identifier_fields or ["_olake_id"]
         key_schema = T.StructType([f for f in self.schema.fields if f.name in id_fields])
-        seqs = {e.added_snapshot_id for e in data}
-        if len(seqs) == 1:
-            df = df.withColumn("__seq", F.lit(seqs.pop()).cast("long"))
-        else:
-            seq_rows = [(self.abs_entry_path(e), e.added_snapshot_id) for e in data]
-            seq_df = local_df(self.spark, seq_rows, "__fpath string, __seq long")
-            df = (
-                df.withColumn("__fpath", _fpath_col())
-                .join(F.broadcast(seq_df), "__fpath", "left")
-                .drop("__fpath")
-            )
         if sum(d.record_count for d in dels) > DRIVER_DELETE_KEY_CAP:
             del_df = self._spark_delete_side(dels, key_schema)
         else:
@@ -347,14 +380,9 @@ class Table:
     def _spark_delete_side(self, dels: list[DataFileEntry], key_schema: T.StructType) -> DataFrame:
         """The same ``(__d_key..., __dseq)`` side as a Spark read of the
         delete files, for delete sets too large to hold on the driver."""
-        dseq_rows = [(self.abs_entry_path(e), e.added_snapshot_id) for e in dels]
-        dseq_df = local_df(self.spark, dseq_rows, "__fpath string, __dseq long")
-        return (
-            self.spark.read.schema(key_schema)
-            .parquet(*[os.path.join(self.location, e.path) for e in dels])
-            .withColumn("__fpath", _fpath_col())
-            .join(F.broadcast(dseq_df), "__fpath")
-            .select(*[F.col(f.name).alias(f"__d_{f.name}") for f in key_schema.fields], "__dseq")
+        dseq = {"__dseq": {d.path: d.added_snapshot_id for d in dels}}
+        return self._read_tagged(dels, key_schema, dseq).select(
+            *[F.col(f.name).alias(f"__d_{f.name}") for f in key_schema.fields], "__dseq"
         )
 
     def pruned_entries(
@@ -439,9 +467,9 @@ class Table:
         removed by ``expire_snapshots`` for the requested range.
 
         One multi-file parquet relation per content kind regardless of
-        how many commits the range spans; the file→snapshot mapping
-        rides in via a tiny broadcast on ``_metadata.file_path`` (same
-        trick as the MoR scan anti-join).
+        how many commits the range spans; each file's commit snapshot
+        is a tag of ``_read_tagged`` (a literal when the range holds one
+        commit of that kind).
         """
         snaps = sorted(self.meta.snapshots, key=lambda s: s.sequence_number)
         by_id = {s.snapshot_id: s for s in snaps}
@@ -508,18 +536,10 @@ class Table:
                 T.StructField("_commit_snapshot_id", T.LongType()),
             ]
         )
-        fpath = _fpath_col()
 
         def _tag(entries: list[DataFileEntry], read_schema: T.StructType) -> DataFrame:
-            paths = [os.path.join(self.location, e.path) for e in entries]
-            snap_rows = [(self.abs_entry_path(e), e.added_snapshot_id) for e in entries]
-            snap_df = local_df(self.spark, snap_rows, "__fpath string, __snap long")
-            return (
-                self.spark.read.schema(read_schema)
-                .parquet(*paths)
-                .withColumn("__fpath", fpath)
-                .join(F.broadcast(snap_df), "__fpath")
-            )
+            snaps = {e.path: e.added_snapshot_id for e in entries}
+            return self._read_tagged(entries, read_schema, {"_commit_snapshot_id": snaps})
 
         parts: list[DataFrame] = []
         if ins_files:
@@ -528,7 +548,7 @@ class Table:
                 df.select(
                     *cols,
                     F.lit("insert").alias("_change_type"),
-                    F.col("__snap").alias("_commit_snapshot_id"),
+                    "_commit_snapshot_id",
                 )
             )
         if del_files:
@@ -543,7 +563,7 @@ class Table:
                 df.select(
                     *padded,
                     F.lit("delete").alias("_change_type"),
-                    F.col("__snap").alias("_commit_snapshot_id"),
+                    "_commit_snapshot_id",
                 )
             )
         if not parts:
@@ -561,7 +581,6 @@ class Table:
         fanout_col: str | None = None,
         num_groups: int | None = None,
         sort_within: list[str] | None = None,
-        record_partition_from_dir: bool = False,
         range_partition_cols: list[str] | None = None,
         partition_by: list[str] | None = None,
         content: str = fmt.CONTENT_DATA,
@@ -616,9 +635,9 @@ class Table:
         elif partition_by:
             # W11/W8: REAL table-partition fanout (Hive-layout dirs, one
             # level per column — typically the rendered segments of a
-            # partition template). Unlike fanout_col, the columns stay
-            # recorded via record_partition_from_dir; repartition on
-            # them first so each partition is written by few tasks.
+            # partition template). Unlike fanout_col, each entry records
+            # its partition directory; repartition on the columns first
+            # so each partition is written by few tasks.
             if shuffle:
                 n = num_groups or self.spark.sparkContext.defaultParallelism
                 writer = df.repartition(n, *[F.col(c) for c in partition_by])
@@ -634,13 +653,10 @@ class Table:
             if sort_within:
                 writer = writer.sortWithinPartitions(*sort_within)
             _sink(writer).parquet(out_dir)
-        files: list[tuple[str, str]] = []
-        for p in glob.glob(os.path.join(out_dir, "**", "*.parquet"), recursive=True):
-            partition = ""
-            if record_partition_from_dir:
-                d = os.path.relpath(os.path.dirname(p), out_dir)
-                partition = "" if d == "." else d
-            files.append((p, partition))
+        files = [
+            (p, os.path.relpath(os.path.dirname(p), out_dir) if partition_by else "")
+            for p in glob.glob(os.path.join(out_dir, "**", "*.parquet"), recursive=True)
+        ]
         stats_cols = self.stats_cols
         if extra_stats_cols:
             # caller-supplied columns tracked for THIS commit only (e.g.
@@ -709,8 +725,9 @@ class Table:
         (``fields``: ``commit_replace`` keywords such as ``operation``)
         or None. The commit refuses the pass when a removed file is no
         longer live or a delete file newer than the base is (Iceberg's
-        ``validateFromSnapshot``); a refused pass removes the data files
-        it wrote, with their sidecars, refreshes and plans again.
+        ``validateFromSnapshot``); a refused pass removes the write
+        directories (``data/<uuid>/``) of the files it added, refreshes
+        and plans again.
         ``COMMIT_RETRIES + 1`` refused passes raise CommitConflict."""
         for n in range(COMMIT_RETRIES + 1):
             if n:
@@ -723,8 +740,8 @@ class Table:
             try:
                 return self.commit_replace(removed, added, base_snapshot_id=base, **fields), added
             except CommitConflict:
-                for e in added:
-                    fsio.remove_file(self.abs_entry_path(e))
+                for d in {os.path.join(*e.path.split("/")[:2]) for e in added}:
+                    fsio.remove_dir(os.path.join(self.location, d))
                 if n == COMMIT_RETRIES:
                     raise
 

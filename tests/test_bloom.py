@@ -203,10 +203,10 @@ class TestBloomTableIntegration:
         keep every file, narrows lookups overall."""
         t = bloom_table
         entries = t.data_entries()
-        rel = {t.abs_entry_path(e): e.path for e in entries}
+        index = {e.path: i for i, e in enumerate(entries)}
         holder = {
-            r["_olake_id"]: rel[r["__file"]]
-            for r in t.scan(file_col="__file").select("_olake_id", "__file").collect()
+            r["_olake_id"]: entries[r["__file"]].path
+            for r in t.scan(tags={"__file": index}).select("_olake_id", "__file").collect()
         }
         assert len(holder) == BASE_N
         kept_total = 0

@@ -18,9 +18,13 @@ from olake_spark.fixtures.audio_clips import FULL_SCHEMA, generate_clips
 from olake_spark.plans.ffd import first_fit_decreasing
 from olake_spark.table.table import Table
 
+#: the checkout this test file belongs to: the subprocesses import its
+#: olake_spark, not whichever copy comes first on their own path
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 APPEND_SNIPPET = """
 import sys, json
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, sys.argv[3])
 from olake_spark.session import get_spark
 from olake_spark.fixtures.audio_clips import generate_clips
 from olake_spark.table.table import Table
@@ -43,7 +47,7 @@ def test_two_processes_append_concurrently(spark, tmp_path):
 
     procs = [
         subprocess.Popen(
-            [sys.executable, "-c", APPEND_SNIPPET, loc, tag],
+            [sys.executable, "-c", APPEND_SNIPPET, loc, tag, ROOT],
             stdout=subprocess.PIPE,
             stderr=subprocess.PIPE,
             text=True,
@@ -328,3 +332,6 @@ def test_rewrite_gives_up_after_bounded_replans(spark, tmp_path):
     assert len(plans) == COMMIT_RETRIES + 1
     assert Table.load(spark, t.location).meta.current_snapshot_id == plans[0]
     _assert_no_orphans(t)
+    # each refused pass's write directory went, _SUCCESS and .crc too
+    data_dirs = os.listdir(os.path.join(t.location, "data"))
+    assert sorted(data_dirs) == sorted(os.listdir(os.path.join(_BASE["path"], "data")))

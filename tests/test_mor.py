@@ -214,10 +214,13 @@ def test_fold_after_fanout_rewrite_keeps_scan_exact(spark, tmp_path):
 
 
 def test_fold_deletes_path_mismatch_fails_loudly(spark, tmp_path, monkeypatch):
-    """If abs_entry_path() and the scan's file_col normalizations ever
-    disagree, fold must raise BEFORE the replace commit — not write
-    empty output over the affected files (ADVICE r3: the inner join
-    made that failure mode silent data loss)."""
+    """If the file keys the tagging read builds from abs_entry_path()
+    ever disagree with Spark's ``_metadata.file_path``, fold must raise
+    BEFORE the replace commit — not write empty output over the
+    affected files (ADVICE r3: the inner join made that failure mode
+    silent data loss) — and a multi-sequence merge-on-read scan must
+    raise rather than give its rows a NULL sequence that outlives
+    every delete."""
     t = _mk_table(spark, str(tmp_path / "t"))
     merge_mor(t, cdc_batch(spark, BASE_N, 1, updates=8, deletes=4))
     before = _content_hash(t)
@@ -226,12 +229,46 @@ def test_fold_deletes_path_mismatch_fails_loudly(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(
         type(t), "abs_entry_path", lambda self, e: "s3://bogus/" + real(self, e)
     )
-    with pytest.raises(Exception, match="rewrite plan|raise_error|not in"):
+    assert len({e.added_snapshot_id for e in t.data_entries()}) > 1
+    with pytest.raises(Exception, match="not in the tagging plan"):
+        t.scan().collect()
+    with pytest.raises(Exception, match="not in the tagging plan"):
         fold_deletes(t)
     monkeypatch.undo()
     t2 = Table.load(spark, t.location)
     assert len(t2.meta.snapshots) == n_snaps  # nothing committed
     assert _content_hash(t2) == before
+
+
+def test_table_at_a_path_spark_escapes(spark, tmp_path):
+    """Spark reports ``_metadata.file_path`` URI-escaped (a space as
+    %20, ``%`` as %25, ``#`` as %23, a no-break space as %C2%A0; ``+``
+    and ``é`` kept): on a table located there, two MoR batches must
+    still scan like CoW, changelog like a plain-path twin, fold and
+    compact (Spark rewrite) without losing or resurrecting a row."""
+    from olake_spark.operators.compaction import compact
+
+    odd = _mk_table(spark, str(tmp_path / "a b%c#d+e" / "dé\u00a0jà"))
+    twin = _mk_table(spark, str(tmp_path / "plain"))
+    cow = _mk_table(spark, str(tmp_path / "cow"))
+    for i in (1, 2):
+        b = cdc_batch(spark, BASE_N, i, updates=6, deletes=3, inserts=2)
+        merge_mor(odd, b)
+        merge_mor(twin, b)
+        merge_into(cow, b)
+    assert len({e.added_snapshot_id for e in odd.data_entries()}) > 1
+    want = _content_hash(cow)
+    assert _content_hash(odd) == want
+
+    def changes(t):
+        log = t.changelog().groupBy("_change_type", "_commit_snapshot_id").count()
+        return sorted(tuple(r) for r in log.collect())
+
+    assert changes(odd) == changes(twin)
+    assert fold_deletes(odd)["delete_files"] == 2
+    assert _content_hash(odd) == want
+    assert compact(odd, target_size=1 << 20, mode="spark")["files_in"] > 1
+    assert _content_hash(odd) == want
 
 
 def test_delete_file_sizing_uses_observed_key_width(spark, tmp_path, monkeypatch):

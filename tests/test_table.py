@@ -97,12 +97,13 @@ class TestTable:
     def test_fanout_write_one_file_per_group(self, spark, tmp_table_dir):
         t = Table.create(spark, tmp_table_dir, "fan", FULL_SCHEMA, ["_olake_id"])
         df = generate_clips(spark, 100).withColumn("grp", (F.col("dur_ms") % 5).cast("int"))
-        entries = t.write_datafiles(
-            df, fanout_col="grp", num_groups=5, record_partition_from_dir=True
-        )
+        entries = t.write_datafiles(df, fanout_col="grp", num_groups=5)
         t.commit_append(entries)
-        assert len(entries) == 5
-        assert {e.partition for e in entries} == {f"grp={i}" for i in range(5)}
+        # one file per grp=i directory; a fanout group is no partition
+        assert sorted(os.path.basename(os.path.dirname(e.path)) for e in entries) == [
+            f"grp={i}" for i in range(5)
+        ]
+        assert {e.partition for e in entries} == {""}
         # fanout col stripped, table cols intact
         assert t.scan().count() == 100
         assert "grp" not in t.scan().columns
@@ -214,3 +215,19 @@ def test_fsio_abstraction_and_uri_footer_harvest(spark, tmp_path):
     assert plain == via_uri
     assert plain.record_count == 10
     assert plain.lower_bounds["_olake_id"] == 0
+
+
+def test_uri_path_matches_hadoop_path_to_uri(spark):
+    """The tagging read's file key is computed in Python; it must spell
+    a path exactly as Hadoop ``Path.toUri()`` does (Spark's
+    ``_metadata.file_path``) for every ASCII character and for kept and
+    escaped non-ASCII ones (letters, no-break and ideographic spaces,
+    C1 controls, line separator, astral)."""
+    from olake_spark.table.table import _uri_path
+
+    to_uri = spark._jvm.org.apache.hadoop.fs.Path
+    chars = [chr(c) for c in range(1, 128) if chr(c) != "/"]
+    chars += ["é", "ß", "中", "\u00a0", "\u0085", "\u2028", "\u3000", "\u200b", "😀"]
+    for c in chars:
+        p = f"/w h/x{c}y/part-0.parquet"
+        assert _uri_path(p) == to_uri(p).toUri().toString(), repr(c)
