@@ -115,17 +115,10 @@ def run_maintenance(spark, n_clips: int, workdir: str, state_hook=None) -> dict:
         df = generate_clips(spark, per, partitions=groups).withColumn(
             "clip_id", F.concat(F.lit(f"w{w}_"), F.col("clip_id"))
         ).withColumn("_olake_id", F.md5(F.col("clip_id")))
-        # md5 keys are uniform -> range ids are analytic from the hex
-        # prefix (no repartitionByRange boundary sampling, which would
-        # re-run the synth UDF); files still get tight key bounds
-        df = df.withColumn(
-            "__rid",
-            (F.conv(F.substring("_olake_id", 1, 4), 16, 10).cast("long") * groups / 65536)
-            .cast("int"),
-        )
-        entries = table.write_datafiles(
-            df, fanout_col="__rid", num_groups=groups, sort_within=["_olake_id"]
-        )
+        # md5 keys are uniform -> the key-range write splits them
+        # analytically (no repartitionByRange boundary sampling, which
+        # would re-run the synth UDF); files still get tight key bounds
+        entries = table.write_datafiles(df, ranged=True, num_groups=groups)
         table.commit_append(entries)
     stages["maint_ingest"] = time.monotonic() - t0
     total_rows = per * waves
@@ -449,9 +442,7 @@ def main_stage_only(stage: str, cores: int, state_dir: str, n_clips: int) -> Non
 
     def run_stage(table) -> None:
         if stage == "compact":
-            # OLAKE_COMPACT_MODE=spark forces the Spark rewrite path
-            # for same-host A/B against the pyarrow copy path (auto)
-            compact(table, mode=os.environ.get("OLAKE_COMPACT_MODE", "auto"))
+            compact(table)
         elif stage == "merge":
             src = cdc_batch(
                 spark,

@@ -80,7 +80,12 @@ JOB_SPEC = {
                     "checkpoint_dir": {"type": "string"},
                     "curve": {"enum": ["zorder", "hilbert"]},
                     "row_weight": {"type": "string"},
-                    "target_size": {"type": "integer"},
+                    "target_size": {
+                        "type": "integer",
+                        "description": "compact, cluster, cluster_incremental, resample, "
+                        "fold_deletes: target data file size in bytes (default: the "
+                        "table's write.target-file-size-bytes)",
+                    },
                     "max_bytes": {"type": "integer", "description": "cluster_incremental: per-run rewrite budget"},
                     "sr_out": {"type": "integer", "description": "resample: target sample rate (default 16000)"},
                     "keep_last": {"type": "integer"},
@@ -261,7 +266,6 @@ def cmd_sync(cfg: dict) -> dict:
                 t,
                 align_batch(_source(s), t.schema),
                 partition_regex=s.get("partition_regex"),
-                target_file_size=s.get("target_size"),
                 lineage=stage_lin,
                 stage=stage_id,
             )

@@ -545,7 +545,7 @@ def merge_mor(spark, sf_dir):
         ts0.alias("_cdc_timestamp"),
         ts0.alias("_olake_timestamp"),
     )
-    t.commit_append(t.write_datafiles(base, range_partition_cols=["key"], num_groups=4))
+    t.commit_append(t.write_datafiles(base, ranged=True, num_groups=4))
 
     price_dec = F.col("o_totalprice").cast("decimal(12,2)")
     upd = o.filter(F.col("o_orderkey") % 7 == 0).select(
@@ -564,7 +564,7 @@ def merge_mor(spark, sf_dir):
         ts1.alias("_cdc_timestamp"),
         ts1.alias("_olake_timestamp"),
     )
-    mor_op(t, upd.unionAll(dels), key="key")
+    mor_op(t, upd.unionAll(dels))
     return t.scan().select(
         "key",
         F.col("final_price").cast("double").alias("final_price"),
@@ -662,7 +662,7 @@ def merge_bloom(spark, sf_dir):
         ts1.alias("_cdc_timestamp"),
         ts1.alias("_olake_timestamp"),
     )
-    cow_merge(t, upd.unionAll(dels), key="key")
+    cow_merge(t, upd.unionAll(dels))
     return t.scan().select(
         "key",
         F.col("final_price").cast("double").alias("final_price"),
@@ -2146,7 +2146,7 @@ def _build_mor_history(spark, sf_dir, prefix: str):
         ts0.alias("_cdc_timestamp"),
         ts0.alias("_olake_timestamp"),
     )
-    t.commit_append(t.write_datafiles(base, range_partition_cols=["key"], num_groups=4))
+    t.commit_append(t.write_datafiles(base, ranged=True, num_groups=4))
     snap1 = t.meta.current_snapshot_id
 
     new_price = (
@@ -2173,7 +2173,7 @@ def _build_mor_history(spark, sf_dir, prefix: str):
         ts1.alias("_cdc_timestamp"),
         ts1.alias("_olake_timestamp"),
     )
-    mor_op(t, upd.unionAll(dels).unionAll(ins), key="key")
+    mor_op(t, upd.unionAll(dels).unionAll(ins))
     _MOR_HISTORY_CACHE[ck] = (t, snap1)
     return t, snap1
 

@@ -200,9 +200,8 @@ def cluster(
             keyed, total_bytes, total_rows, n_ranges, sample_rows, row_weight, skew_cap
         )
 
-        ident = t.meta.identifier_fields[0] if t.meta.identifier_fields else "clip_id"
         assign = _assign_range_udf(boundaries, salt_counts)
-        ranged = keyed.withColumn(RANGE_COL, assign(F.col(KEY_COL), F.col(ident)))
+        ranged = keyed.withColumn(RANGE_COL, assign(F.col(KEY_COL), F.col(t.key)))
 
         # one output file per distinct range id (base ranges + salt lanes);
         # the curve key column stays in the files (scan schema ignores it)

@@ -90,14 +90,12 @@ def _copy_bins(table: Table, bins: list[Bin], entry_by_path: dict[str, DataFileE
     # paths) so the copy path works against any from_uri storage
     loc_fs, _ = fs_for(table.location)
     loc_fs.create_dir(fs_for(out_dir)[1], recursive=True)
-    key = table.meta.identifier_fields[0] if table.meta.identifier_fields else None
 
     def _lower(p: str):
         # NATIVE value ordering: str() would order numeric keys
         # lexicographically (10 < 2 < 9), widening the output file's
         # key range and weakening merge narrow-pass pruning
-        e = entry_by_path[p]
-        v = e.lower_bounds.get(key) if key else None
+        v = entry_by_path[p].lower_bounds.get(table.key)
         return (v is None, v)
 
     def _lower_str(p: str):
@@ -269,7 +267,6 @@ def _rewrite_bins(table: Table, bins: list[Bin], entry_by_path: dict[str, DataFi
     src_entries = [entry_by_path[p] for p in paths]
     bin_of = {p: b.bin_id for b in bins for p, _ in b.items}
     binned = table.scan(entries=src_entries, tags={FANOUT_COL: bin_of})
-    key = table.meta.identifier_fields[0] if table.meta.identifier_fields else None
     # per-file roll budget from observed bytes/row (W4): a bin whose
     # input stats underestimated its size still rolls at the target
     tot_bytes = sum(e.file_size_bytes for e in src_entries)
@@ -279,7 +276,7 @@ def _rewrite_bins(table: Table, bins: list[Bin], entry_by_path: dict[str, DataFi
         binned,
         fanout_col=FANOUT_COL,
         num_groups=len(bins),
-        sort_within=[key] if key else None,
+        sort_within=[table.key],
         max_records_per_file=roll_rows,
     )
     # a rewrite must carry every input row — abort BEFORE the replace
@@ -294,7 +291,7 @@ def _rewrite_bins(table: Table, bins: list[Bin], entry_by_path: dict[str, DataFi
     return paths, new_entries
 
 
-def _wave_attempt(wave: list[Bin], target_size: int, mode: str):
+def _wave_attempt(wave: list[Bin], target_size: int):
     """``Table.rewrite`` attempt for one compaction wave: fold live
     deletes, keep the bins whose inputs are all still live, rewrite."""
 
@@ -317,8 +314,7 @@ def _wave_attempt(wave: list[Bin], target_size: int, mode: str):
         live = [b for b in wave if all(p in entry_by_path for p, _ in b.items)]
         if not live:
             return None
-        rewrite = _rewrite_bins if mode == "spark" else _copy_bins
-        removed, new_entries = rewrite(t, live, entry_by_path)
+        removed, new_entries = _copy_bins(t, live, entry_by_path)
         return set(removed), new_entries, {"operation": "compact", "summary": {"bins": len(live)}}
 
     return attempt
@@ -331,7 +327,6 @@ def compact(
     lineage: LineageManifest | None = None,
     stage: str = "compact",
     wave_bins: int = 64,
-    mode: str = "auto",
     ticker=None,
 ) -> dict:
     """Compact small files; returns metrics. Resumable per wave.
@@ -354,16 +349,12 @@ def compact(
     after the snapshot the wave read makes its replace refuse, and the
     wave removes its outputs, folds again and re-plans.
 
-    mode: "auto" (default) uses the pyarrow row-group COPY path
-    (`_copy_bins` — one task per bin, no shuffle, no JVM byte path)
-    since deletes are always folded first; "spark" forces the
-    tagged-scan→fanout rewrite (`_rewrite_bins`). Both paths feed
-    the same footer-stats harvest and the same replace commit, and the
-    pre-commit row-count guard holds for both."""
-    if mode not in ("auto", "spark"):
-        # a typo'd mode silently selecting the copy path would invalidate
-        # any copy-vs-spark A/B the caller thinks it is running
-        raise ValueError(f"compact mode must be 'auto' or 'spark', got {mode!r}")
+    Bins are written by the pyarrow row-group COPY path (`_copy_bins` —
+    one task per bin, no shuffle, no JVM byte path), since deletes are
+    always folded first; a bin whose inputs mix physical schemas falls
+    back to the tagged-scan→fanout rewrite (`_rewrite_bins`). Both
+    paths feed the same footer-stats harvest and the same replace
+    commit, and the pre-commit row-count guard holds for both."""
     target_size = target_size or table.target_file_size
     from olake_spark.operators.merge import fold_deletes
 
@@ -404,7 +395,7 @@ def compact(
         if lineage is not None and lineage.is_done(stage, unit):
             done_waves += 1
             continue
-        done = table.rewrite(_wave_attempt(wv, target_size, mode))
+        done = table.rewrite(_wave_attempt(wv, target_size))
         if done is None:
             if lineage is not None:
                 lineage.mark_done(stage, unit, snapshot_id=table.meta.current_snapshot_id)

@@ -50,7 +50,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from olake_spark.session import local_df
-from olake_spark.table.fsio import fs_for
+from olake_spark.table.fsio import fs_for, hadoop_literal
 from olake_spark.table.table import Table
 
 #: Iceberg's remove_orphan_files default: 3 days. Must exceed the
@@ -209,7 +209,7 @@ def remove_orphan_files(
     if live_manifest_rels:
         live_df = (
             spark.read.parquet(
-                *[os.path.join(location, m) for m in live_manifest_rels]
+                *[hadoop_literal(os.path.join(location, m)) for m in live_manifest_rels]
             )
             .select(F.col("path").alias("rel_path"))
             .distinct()

@@ -286,9 +286,8 @@ def cluster_incremental(
         boundaries, salt_counts = _plan_ranges(
             keyed, total_bytes, total_rows, n_ranges, sample_rows, row_weight, skew_cap
         )
-        ident = t.meta.identifier_fields[0] if t.meta.identifier_fields else "clip_id"
         assign = _assign_range_udf(boundaries, salt_counts)
-        ranged = keyed.withColumn(RANGE_COL, assign(F.col(KEY_COL), F.col(ident)))
+        ranged = keyed.withColumn(RANGE_COL, assign(F.col(KEY_COL), F.col(t.key)))
         n_groups = len(boundaries) + 1 + sum(salt_counts.values())
         new_entries = t.write_datafiles(
             ranged,

@@ -51,7 +51,6 @@ def append_batch(
     table: Table,
     df: DataFrame,
     partition_regex: str | None = None,
-    target_file_size: int | None = None,
     lineage: LineageManifest | None = None,
     stage: str = "append",
 ) -> dict:
@@ -60,13 +59,12 @@ def append_batch(
     The caller aligns/filters ``df`` first (cli.cmd_sync does both).
     With ``partition_regex``, each template path segment becomes one
     Hive directory level and the manifest records the rendered raw
-    sub-path; without it, rows are range-partitioned on the identifier
-    key so file bounds stay selective for MERGE pruning.
+    sub-path; without it, rows are split into ranges of ``table.key``
+    (``write_datafiles(ranged=True)``) so file bounds stay selective
+    for MERGE pruning.
     """
     if lineage is not None and lineage.stage_complete(stage):
         return {"skipped": True, "snapshot_id": lineage.stage_snapshot(stage)}
-    target_file_size = target_file_size or table.target_file_size
-    ident = (table.meta.identifier_fields or ["_olake_id"])[0]
 
     if partition_regex:
         seg_cols = partition_template_segment_cols(partition_regex, df)
@@ -76,15 +74,12 @@ def append_batch(
         entries = table.write_datafiles(
             df,
             partition_by=part_names,
-            sort_within=[ident],
+            sort_within=[table.key],
         )
         for e in entries:
             e.partition = decode_hive_partition(e.partition)
     else:
-        entries = table.write_datafiles(
-            df,
-            range_partition_cols=[ident],
-        )
+        entries = table.write_datafiles(df, ranged=True)
     snap = table.commit_append(
         entries,
         summary={"op": "append", "partition_regex": partition_regex or ""},

@@ -247,21 +247,10 @@ def _bloom_refine(
     return [rel for rel in affected if abs_by_rel[rel] in kept_abs]
 
 
-def _uniform_hex_key(table: Table, key: str) -> bool:
-    """True when the merge key is known uniform-hex (md5 `_olake_id` per
-    utils/utils.go:252-273, or declared via table property
-    ``merge.key-distribution=uniform-hex``)."""
-    prop = table.meta.properties.get("merge.key-distribution")
-    if prop:
-        return prop == "uniform-hex"
-    return key == "_olake_id"
-
-
 def _write_merged(
     table: Table,
     source: DataFrame,
     target_sub: DataFrame,
-    key: str,
     n_files: int,
     roll_rows: int,
 ) -> list:
@@ -272,7 +261,9 @@ def _write_merged(
     # uniform hex, so range ids are ANALYTIC from the key prefix — one
     # pass. repartitionByRange would sample its child, re-executing the
     # whole merge join a second time just to find boundaries.
-    if _uniform_hex_key(table, key):
+    key = table.key
+    rid = table.key_range_id(n_files)
+    if rid is not None:
         # SINGLE-EXCHANGE sorted merge: the sort-merge join's sort and
         # merge phases are fused with batch dedup AND the write fanout.
         # Target rows (seq 0) and raw source rows (seq 1) are unioned,
@@ -294,10 +285,6 @@ def _write_merged(
         # subset-key partitioning: EnsureRequirements rewrites a user
         # repartition(__rid) into its own full-key exchange (verified
         # empirically; co-partitioning requires all join keys).
-        rid = (
-            F.conv(F.substring(F.col(key), 1, 4), 16, 10).cast("long")
-            * n_files / 65536
-        ).cast("int")
         tcols = target_sub.columns
         src_types = {f.name: f.dataType for f in source.schema.fields}
         s_u = (
@@ -352,22 +339,19 @@ def _write_merged(
             F.coalesce(F.col("s._op_type"), F.lit("")) != F.lit("d")
         ).select(*cols)
         return table.write_datafiles(
-            merged,
-            range_partition_cols=[key],
-            num_groups=n_files,
-            max_records_per_file=roll_rows,
+            merged, ranged=True, num_groups=n_files, max_records_per_file=roll_rows
         )
 
 
 def merge_into(
     table: Table,
     source: DataFrame,
-    key: str = "_olake_id",
     target_file_size: int | None = None,
     lineage: LineageManifest | None = None,
     stage: str = "merge",
 ) -> dict:
-    """Apply a CDC batch to the table; returns metrics.
+    """Apply a CDC batch to the table, upserting on ``table.key``;
+    returns metrics.
 
     Idempotent: replaying the same batch after a completed commit is a
     no-op when driven through the same lineage manifest (the committed
@@ -397,6 +381,7 @@ def merge_into(
     # bound and anti-scales with cores — keys-only + single full pass
     # is both fewer bytes and cleanly parallel.
     _assert_scan_stable(source, "merge")
+    key = table.key
     keys_df = source.select(key).distinct().cache()
     src_rows = keys_df.count()
     if src_rows == 0:
@@ -419,7 +404,7 @@ def merge_into(
         # starts a new file at the target row budget
         roll_rows = max(1, int(target_file_size / bytes_per_row))
 
-        new_entries = _write_merged(t, source, target_sub, key, n_files, roll_rows)
+        new_entries = _write_merged(t, source, target_sub, n_files, roll_rows)
         summary = {"source-rows": src_rows, "pruned-files": len(entry_by_path) - len(affected)}
         return set(affected), new_entries, {"operation": "merge", "summary": summary}
 
@@ -444,14 +429,14 @@ def merge_into(
 def merge_mor(
     table: Table,
     source: DataFrame,
-    key: str = "_olake_id",
     lineage: LineageManifest | None = None,
     stage: str = "merge-mor",
 ) -> dict:
     """Merge-on-read: the reference's ACTUAL write path — one equality-
-    delete file + one data file per batch, deletes resolved by readers
-    (BaseDeltaTaskWriter.java:49-61 delete-then-insert; delete-file
-    registration IcebergTableOperator.java:280-321).
+    delete file of ``table.key`` values + one data file per batch,
+    deletes resolved by readers (BaseDeltaTaskWriter.java:49-61
+    delete-then-insert; delete-file registration
+    IcebergTableOperator.java:280-321).
 
     Commit cost is O(batch) bytes — no target files are read or
     rewritten, which is the mode that keeps a trickle of CDC cheap on a
@@ -471,21 +456,6 @@ def merge_mor(
     """
     if lineage is not None and lineage.stage_complete(stage):
         return {"skipped": True, "snapshot_id": lineage.stage_snapshot(stage)}
-    # the scan-side anti-join resolves deletes on ALL the table's
-    # identifier fields, and a delete file here holds only ``key`` — a
-    # delete keyed differently, or on part of a composite identifier,
-    # would be silently ignored at read time
-    id_fields = table.meta.identifier_fields or [key]
-    if len(id_fields) > 1:
-        raise ValueError(
-            f"merge_mor needs a single identifier field; the table has {id_fields} "
-            "and its delete files would hold only one of them"
-        )
-    if key != id_fields[0]:
-        raise ValueError(
-            f"merge_mor key {key!r} must be the table identifier field {id_fields[0]!r}"
-        )
-
     # upsert = delete old version + insert new: EVERY source key goes in
     # the delete file; only non-'d' winners land in the data file.
     # The delete file needs keys only (winners' keys == distinct source
@@ -493,6 +463,7 @@ def merge_mor(
     # payload is scanned exactly once, by the data-file write below —
     # no checkpoint materialization of binary rows.
     _assert_scan_stable(source, "merge")
+    key = table.key
     keys_df = source.select(key).distinct().cache()
     kstats = keys_df.agg(
         F.count(F.lit(1)).alias("n"),
@@ -508,8 +479,8 @@ def merge_mor(
     # small-partition coalescing, so bound the fanout explicitly. The
     # per-key byte cost comes from the batch's OBSERVED average key
     # width (piggybacked on the count action over the cached keys),
-    # not a constant: a long composite key under a 64-bytes/key guess
-    # would overfill files well past the target.
+    # not a constant: a long key under a 64-bytes/key guess would
+    # overfill files well past the target.
     key_bytes = float(kstats["w"] or 32.0) + 20.0  # + encoding/offset overhead
     n_del_files = max(1, math.ceil(src_rows * key_bytes / (64 << 20)))
     del_entries = table.write_datafiles(
@@ -563,21 +534,17 @@ def fold_deletes(
     """
     if lineage is not None and lineage.stage_complete(stage):
         return {"skipped": True, "snapshot_id": lineage.stage_snapshot(stage)}
-    key = (table.meta.identifier_fields or ["_olake_id"])[0]
     target_file_size = target_file_size or table.target_file_size
 
     def attempt(t: Table):
         dels = t.delete_entries()
         if not dels:
             return None
-        key_schema = T.StructType([next(f for f in t.schema.fields if f.name == key)])
-        del_keys = t.spark.read.schema(key_schema).parquet(
-            *[os.path.join(t.location, e.path) for e in dels]
-        )
-        affected = affected_file_paths(t, del_keys, key)
+        del_keys = t._read_tagged(dels, T.StructType([t.schema[t.key]]), {})
+        affected = affected_file_paths(t, del_keys, t.key)
         entry_by_path = {e.path: e for e in t.data_entries()}
         aff_entries = [entry_by_path[p] for p in affected]
-        new_entries = _fold_rewrite(t, aff_entries, key, target_file_size) if aff_entries else []
+        new_entries = _fold_rewrite(t, aff_entries, target_file_size) if aff_entries else []
         summary = {"folded-delete-files": len(dels), "rewritten-files": len(affected)}
         removed = set(affected) | {e.path for e in dels}
         return removed, new_entries, {"operation": "fold-deletes", "summary": summary}
@@ -598,7 +565,7 @@ def fold_deletes(
     return metrics
 
 
-def _fold_rewrite(table: Table, aff_entries: list, key: str, target_file_size: int) -> list:
+def _fold_rewrite(table: Table, aff_entries: list, target_file_size: int) -> list:
     """Rewrite ``aff_entries`` with the live deletes applied, one output
     group per input file."""
     # scan applies the deletes; only affected files are read + rewritten.
@@ -622,7 +589,7 @@ def _fold_rewrite(table: Table, aff_entries: list, key: str, target_file_size: i
         survivors,
         fanout_col="__rid",
         num_groups=len(aff_entries),
-        sort_within=[key],
+        sort_within=[table.key],
         max_records_per_file=roll_rows,
         shuffle=False,
     )

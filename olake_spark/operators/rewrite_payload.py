@@ -16,9 +16,9 @@ Scale design:
 - **row split inside selected files**: ``predicate`` rows go through
   the Arrow-batched transform; the rest pass through byte-identical.
   Both halves ride one union plan into the fanout write.
-- **one payload pass**: scan → (transform | passthrough) → analytic
-  range-id fanout (same single-exchange layout as merge) → replace
-  commit. Bounds stay tight for future pruning.
+- **one payload pass**: scan → (transform | passthrough) → key-range
+  write (``write_datafiles(ranged=True)``, the layout merge writes) →
+  replace commit. Bounds stay tight for future pruning.
 - payload work is numpy inside ``mapInPandas`` (no per-row Python).
 
 ``fold_deletes`` runs first when equality deletes are live — a rewrite
@@ -66,7 +66,7 @@ def rewrite_payload(
     def attempt(t: Table):
         # rewritten rows get a newer sequence than any live delete —
         # fold first (same contract as compact/cluster)
-        from olake_spark.operators.merge import _uniform_hex_key, fold_deletes
+        from olake_spark.operators.merge import fold_deletes
 
         fold_deletes(t, target_file_size=target_file_size)
         entries = t.entries()
@@ -99,26 +99,9 @@ def rewrite_payload(
         n_files = max(1, math.ceil(total_bytes / target_file_size))
         roll_rows = max(1, int(target_file_size / bytes_per_row))
 
-        ident = t.meta.identifier_fields[0] if t.meta.identifier_fields else "clip_id"
-        if _uniform_hex_key(t, ident):
-            rid = (
-                F.conv(F.substring(F.col(ident), 1, 4), 16, 10).cast("long")
-                * n_files / 65536
-            ).cast("int")
-            new_entries = t.write_datafiles(
-                out.withColumn("__rid", rid),
-                fanout_col="__rid",
-                num_groups=n_files,
-                sort_within=[ident],
-                max_records_per_file=roll_rows,
-            )
-        else:
-            new_entries = t.write_datafiles(
-                out,
-                range_partition_cols=[ident],
-                num_groups=n_files,
-                max_records_per_file=roll_rows,
-            )
+        new_entries = t.write_datafiles(
+            out, ranged=True, num_groups=n_files, max_records_per_file=roll_rows
+        )
         return {e.path for e in selected}, new_entries, {
             "operation": stage,
             "summary": {"rewritten-files": len(selected), "carried-over": plan["carried_over"]},

@@ -65,7 +65,6 @@ def cdc_stream_merge(
     table: Table,
     source_dir: str,
     checkpoint_dir: str,
-    key: str | None = None,
     max_files_per_trigger: int | None = None,
     timeout_s: float = 600.0,
     fmt: str = "parquet",
@@ -74,7 +73,8 @@ def cdc_stream_merge(
     transform: Callable[[DataFrame], DataFrame] | None = None,
     mongo_cursor_path: str | None = None,
 ) -> dict:
-    """Drain a CDC landing dir into the table via per-batch MERGE.
+    """Drain a CDC landing dir into the table via per-batch MERGE on
+    ``table.key``.
 
     Bounded run (Trigger.AvailableNow): returns after all files
     present at start are merged. Restarting with the same
@@ -115,11 +115,6 @@ def cdc_stream_merge(
         raise ValueError(f"mode must be 'cow' or 'mor', got {mode!r}")
     if fmt != "mongo_jsonl" and mongo_cursor_path is not None:
         raise ValueError("mongo_cursor_path applies only to fmt='mongo_jsonl'")
-    # the merge key is a TABLE property — default to its identifier
-    # field (merge_mor refuses anything else: delete files keyed
-    # differently are invisible to the scan-side anti-join)
-    if key is None:
-        key = (table.meta.identifier_fields or ["_olake_id"])[0]
     if fold_every is not None and mode != "mor":
         # CoW has no delete files to fold — a silently ignored cadence
         # would hide a misconfigured job
@@ -187,7 +182,7 @@ def cdc_stream_merge(
         if transform is not None:
             batch_df = cached = transform(batch_df).cache()
         try:
-            m = merge_fn(table, batch_df, key=key)
+            m = merge_fn(table, batch_df)
             if raw is not None:
                 # T5 ordering: merge COMMITTED above; only now may the
                 # source cursor advance (even for batches whose ops all

@@ -21,6 +21,7 @@ stores need) — see README "Deployment surfaces".
 from __future__ import annotations
 
 import os
+import re
 from concurrent.futures import ThreadPoolExecutor
 
 from pyarrow import fs as pafs
@@ -45,6 +46,28 @@ def fs_for(path: str) -> tuple[pafs.FileSystem, str]:
         return pafs.LocalFileSystem(), os.path.abspath(path)
     f, p = pafs.FileSystem.from_uri(path)
     return f, p
+
+
+def hadoop_literal(path: str) -> str:
+    """``path`` with Hadoop's glob metacharacters (``\\ { } [ ] * ?``)
+    backslash-escaped, so ``spark.read.parquet`` reads exactly that
+    file: under a table at ``…/x[1]`` or ``…/y{a,b}`` the raw path is a
+    pattern that matches nothing (PATH_NOT_FOUND)."""
+    return re.sub(r"([\\{}\[\]*?])", r"\\\1", path)
+
+
+def parquet_files(path: str) -> list[str]:
+    """The ``*.parquet`` files under the directory ``path``
+    (recursively), without Spark's hidden ``.``/``_`` files, listed
+    through ``fs_for``: names are literal, never a glob pattern."""
+    fs, p = fs_for(path)
+    infos = fs.get_file_info(pafs.FileSelector(p, recursive=True, allow_not_found=True))
+    return sorted(
+        i.path for i in infos
+        if i.type == pafs.FileType.File
+        and i.base_name.endswith(".parquet")
+        and not i.base_name.startswith((".", "_"))
+    )
 
 
 def file_size(path: str, fs: pafs.FileSystem | None = None) -> int:

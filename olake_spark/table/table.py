@@ -21,7 +21,6 @@ arrow-writer/utils.go:22).
 from __future__ import annotations
 
 import dataclasses
-import glob
 import json
 import os
 import re
@@ -30,10 +29,10 @@ import uuid
 
 import pyarrow as pa
 import pyarrow.parquet as papq
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.pandas.types import to_arrow_type
 
 from olake_spark.session import local_df
 from olake_spark.table import bloom as bloom_mod
@@ -100,7 +99,7 @@ class Table:
         self.spark = spark
         self.meta = meta
         self.backend = backend or fmt.FileCommitBackend()
-        #: delete-file path → its key columns (pyarrow, nulls dropped),
+        #: delete-file path → its key column (pyarrow, nulls dropped),
         #: read once per handle: delete files are immutable and
         #: uuid-named, so entries only leave once no longer live
         self._delete_keys: dict[str, pa.Table] = {}
@@ -118,6 +117,12 @@ class Table:
         properties: dict | None = None,
         backend=None,
     ) -> "Table":
+        if len(identifier_fields or []) > 1:
+            raise ValueError(
+                f"a table has one key column, got identifier fields {identifier_fields}: "
+                "hash a composite primary key into one column, as OLake's _olake_id "
+                "(md5 of the sorted primary-key values) does"
+            )
         if isinstance(schema, str):
             schema = T.StructType.fromDDL(schema)
         # relative locations break any comparison against Spark's
@@ -166,6 +171,23 @@ class Table:
     @property
     def schema(self) -> T.StructType:
         return T.StructType.fromJson(json.loads(self.meta.schema_json))
+
+    @property
+    def key(self) -> str:
+        """The one key column that upserts, equality deletes and key
+        ranges use: the identifier field, else ``_olake_id``, the md5 of
+        the sorted primary-key values (utils/utils.go:252-273)."""
+        return (self.meta.identifier_fields or ["_olake_id"])[0]
+
+    def key_range_id(self, n: int) -> Column | None:
+        """The range id in ``[0, n)`` of each row's key, computed from
+        its first four hex digits, when the key is the uniform-hex md5
+        ``_olake_id``; else None (``repartitionByRange`` has to sample
+        the key's distribution)."""
+        if self.key != "_olake_id":
+            return None
+        prefix = F.conv(F.substring(F.col(self.key), 1, 4), 16, 10).cast("long")
+        return (prefix * n / 65536).cast("int")
 
     @property
     def target_file_size(self) -> int:
@@ -282,7 +304,7 @@ class Table:
         if not entries:
             return local_df(self.spark, [], T.StructType(schema.fields + tag_fields))
         df = self.spark.read.schema(schema).parquet(
-            *[os.path.join(self.location, e.path) for e in entries]
+            *[fsio.hadoop_literal(os.path.join(self.location, e.path)) for e in entries]
         )
         joined = []
         for f in tag_fields:
@@ -337,25 +359,21 @@ class Table:
         ``autoBroadcastJoinThreshold`` falls back to a sort-merge
         anti-join.
         """
-        id_fields = self.meta.identifier_fields or ["_olake_id"]
-        key_schema = T.StructType([f for f in self.schema.fields if f.name in id_fields])
+        key_field = self.schema[self.key]
         if sum(d.record_count for d in dels) > DRIVER_DELETE_KEY_CAP:
-            del_df = self._spark_delete_side(dels, key_schema)
+            del_df = self._spark_delete_side(dels, key_field)
         else:
-            del_df = self._driver_delete_side(dels, key_schema)
-        cond = F.col("__seq") < F.col("__dseq")
-        for c in key_schema.names:
-            cond = cond & (F.col(c) == F.col(f"__d_{c}"))
+            del_df = self._driver_delete_side(dels, key_field)
+        cond = (F.col("__seq") < F.col("__dseq")) & (F.col(self.key) == F.col("__d_key"))
         return df.join(del_df, cond, "left_anti").drop("__seq")
 
-    def _driver_delete_side(self, dels: list[DataFileEntry], key_schema: T.StructType) -> DataFrame:
-        """``(__d_key..., __dseq)``: each non-null key of ``dels`` once,
+    def _driver_delete_side(self, dels: list[DataFileEntry], key_field: T.StructField) -> DataFrame:
+        """``(__d_key, __dseq)``: each non-null key of ``dels`` once,
         with the newest sequence of the delete files that hold it."""
-        key_cols = key_schema.names
         # each file keeps the key type it was written with (a batch's
         # own type, possibly narrower than an in-place promoted column,
         # required or nullable), so cast to the table's key type here
-        key_type = pa.schema([f.with_nullable(True) for f in to_arrow_schema(key_schema)])
+        key_type = pa.schema([(key_field.name, to_arrow_type(key_field.dataType))])
         parts = []
         for d in dels:
             keys = self._delete_keys.get(d.path)
@@ -363,26 +381,25 @@ class Table:
                 fs, p = fsio.fs_for(os.path.join(self.location, d.path))
                 pf = papq.ParquetFile(p, filesystem=fs)
                 try:
-                    keys = pf.read(columns=key_cols).drop_null()
+                    keys = pf.read(columns=[key_field.name]).drop_null()
                 finally:
                     pf.close()
                 self._delete_keys[d.path] = keys
             keys = keys.cast(key_type)
             dseq = pa.repeat(pa.scalar(d.added_snapshot_id, pa.int64()), keys.num_rows)
             parts.append(keys.append_column("__dseq", dseq))
-        grouped = pa.concat_tables(parts).group_by(key_cols).aggregate([("__dseq", "max")])
+        grouped = pa.concat_tables(parts).group_by(key_field.name).aggregate([("__dseq", "max")])
         schema = T.StructType(
-            [T.StructField(f"__d_{f.name}", f.dataType) for f in key_schema.fields]
-            + [T.StructField("__dseq", T.LongType())]
+            [T.StructField("__d_key", key_field.dataType), T.StructField("__dseq", T.LongType())]
         )
-        return local_df(self.spark, grouped.select(key_cols + ["__dseq_max"]), schema)
+        return local_df(self.spark, grouped.select([key_field.name, "__dseq_max"]), schema)
 
-    def _spark_delete_side(self, dels: list[DataFileEntry], key_schema: T.StructType) -> DataFrame:
-        """The same ``(__d_key..., __dseq)`` side as a Spark read of the
+    def _spark_delete_side(self, dels: list[DataFileEntry], key_field: T.StructField) -> DataFrame:
+        """The same ``(__d_key, __dseq)`` side as a Spark read of the
         delete files, for delete sets too large to hold on the driver."""
         dseq = {"__dseq": {d.path: d.added_snapshot_id for d in dels}}
-        return self._read_tagged(dels, key_schema, dseq).select(
-            *[F.col(f.name).alias(f"__d_{f.name}") for f in key_schema.fields], "__dseq"
+        return self._read_tagged(dels, T.StructType([key_field]), dseq).select(
+            F.col(key_field.name).alias("__d_key"), "__dseq"
         )
 
     def pruned_entries(
@@ -452,7 +469,7 @@ class Table:
         Semantics (Iceberg incremental-append parity):
         - ``append`` commits → their data files become ``insert`` rows;
           their equality-delete files become ``delete`` rows (key
-          columns populated, everything else null). A merge-on-read
+          column populated, everything else null). A merge-on-read
           upsert therefore emits delete+insert per key — standard CDC
           output, and an MoR-maintained table has a fully
           changelog-able history at O(batch) read cost per commit.
@@ -552,11 +569,9 @@ class Table:
                 )
             )
         if del_files:
-            key_cols = self.meta.identifier_fields or ["_olake_id"]
-            key_schema = T.StructType([f for f in schema.fields if f.name in key_cols])
-            df = _tag(del_files, key_schema)
+            df = _tag(del_files, T.StructType([schema[self.key]]))
             padded = [
-                (F.col(c) if c in key_cols else F.lit(None).cast(schema[c].dataType)).alias(c)
+                (F.col(c) if c == self.key else F.lit(None).cast(schema[c].dataType)).alias(c)
                 for c in cols
             ]
             parts.append(
@@ -581,7 +596,7 @@ class Table:
         fanout_col: str | None = None,
         num_groups: int | None = None,
         sort_within: list[str] | None = None,
-        range_partition_cols: list[str] | None = None,
+        ranged: bool = False,
         partition_by: list[str] | None = None,
         content: str = fmt.CONTENT_DATA,
         max_records_per_file: int | None = None,
@@ -603,10 +618,13 @@ class Table:
         saving a full payload shuffle. If the guarantee is violated the
         result is still correct, just more files (one per task×group).
 
-        range_partition_cols: range-partition + sort by these columns
-        instead — each output file covers a tight key range, so the
-        min/max manifest stats stay selective for future MERGE/scan
-        pruning (one file ≈ one Iceberg sort-order cluster).
+        ranged: split the rows into ``num_groups`` disjoint ranges of
+        the table ``key`` instead, one sorted file each, so the min/max
+        manifest stats stay selective for future MERGE/scan pruning (one
+        file ≈ one Iceberg sort-order cluster). The uniform-hex
+        ``_olake_id`` is split analytically (``key_range_id``: a fanout
+        on the range id, no sampling job); any other key goes through
+        ``repartitionByRange``, which samples it first.
 
         max_records_per_file: per-file ROLL enforcement (W4, the
         reference's rolling size-targeted writer) — the partitioning
@@ -624,6 +642,13 @@ class Table:
                 w = w.option("maxRecordsPerFile", int(max_records_per_file))
             return w
 
+        if ranged:
+            num_groups = num_groups or self.spark.sparkContext.defaultParallelism
+            rid, sort_within = self.key_range_id(num_groups), [self.key]
+            if rid is None:
+                df = df.repartitionByRange(num_groups, self.key)
+            else:
+                df, fanout_col = df.withColumn("__rid", rid), "__rid"
         writer = df
         if fanout_col is not None:
             if shuffle:
@@ -644,18 +669,13 @@ class Table:
             if sort_within:
                 writer = writer.sortWithinPartitions(*partition_by, *sort_within)
             _sink(writer).partitionBy(*partition_by).parquet(out_dir)
-        elif range_partition_cols:
-            n = num_groups or self.spark.sparkContext.defaultParallelism
-            cols = [F.col(c) for c in range_partition_cols]
-            writer = df.repartitionByRange(n, *cols).sortWithinPartitions(*cols)
-            _sink(writer).parquet(out_dir)
         else:
             if sort_within:
                 writer = writer.sortWithinPartitions(*sort_within)
             _sink(writer).parquet(out_dir)
         files = [
             (p, os.path.relpath(os.path.dirname(p), out_dir) if partition_by else "")
-            for p in glob.glob(os.path.join(out_dir, "**", "*.parquet"), recursive=True)
+            for p in fsio.parquet_files(out_dir)
         ]
         stats_cols = self.stats_cols
         if extra_stats_cols:

@@ -95,7 +95,7 @@ class TestCasCatalogBackend:
         for k in range(2):
             df = _clips(spark, 20, f"g{k}_")
             t.commit_append(
-                t.write_datafiles(df, range_partition_cols=["_olake_id"], num_groups=2)
+                t.write_datafiles(df, ranged=True, num_groups=2)
             )
         from olake_spark.operators.merge import merge_into
 
@@ -119,12 +119,12 @@ class TestCasCatalogBackend:
         t = _create(spark, loc, cas_backend)
         stale = Table.load(spark, loc, backend=cas_backend)  # second writer on an old snapshot
         t.commit_append(
-            t.write_datafiles(_clips(spark, 10, "a_"), range_partition_cols=["_olake_id"], num_groups=1)
+            t.write_datafiles(_clips(spark, 10, "a_"), ranged=True, num_groups=1)
         )
         # stale writer's first attempt loses the CAS, then the commit
         # loop refreshes and wins the next version
         stale.commit_append(
-            stale.write_datafiles(_clips(spark, 10, "b_"), range_partition_cols=["_olake_id"], num_groups=1)
+            stale.write_datafiles(_clips(spark, 10, "b_"), ranged=True, num_groups=1)
         )
         final = Table.load(spark, loc, backend=cas_backend)
         assert final.scan().count() == 20

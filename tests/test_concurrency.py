@@ -130,7 +130,7 @@ def _race_base(spark, tmp_path_factory):
             df = df.withColumn(
                 "clip_id", F.concat(F.lit("x_"), F.col("clip_id"))
             ).withColumn("_olake_id", F.md5(F.col("clip_id")))
-        t.commit_append(t.write_datafiles(df, range_partition_cols=["_olake_id"], num_groups=3))
+        t.commit_append(t.write_datafiles(df, ranged=True, num_groups=3))
     _BASE["path"] = path
     yield
     _BASE.clear()

@@ -34,7 +34,7 @@ def small_table(spark, tmp_table_dir):
         df = generate_clips(spark, 20).withColumn(
             "clip_id", F.concat(F.lit(f"g{k}_"), F.col("clip_id"))
         ).withColumn("_olake_id", F.md5("clip_id"))
-        t.commit_append(t.write_datafiles(df, range_partition_cols=["_olake_id"], num_groups=2))
+        t.commit_append(t.write_datafiles(df, ranged=True, num_groups=2))
     return t
 
 

@@ -31,7 +31,7 @@ def _content_hash(df):
 def _append(t, df, groups=3):
     df = df.withColumn("_olake_id", F.md5("clip_id"))
     t.commit_append(
-        t.write_datafiles(df, range_partition_cols=["_olake_id"], num_groups=groups)
+        t.write_datafiles(df, ranged=True, num_groups=groups)
     )
 
 

@@ -37,7 +37,7 @@ def fragmented_table(spark, tmp_table_dir):
         df = generate_clips(spark, 30).withColumn(
             "clip_id", F.concat(F.lit(f"g{k}_"), F.col("clip_id"))
         ).withColumn("_olake_id", F.md5("clip_id"))
-        t.commit_append(t.write_datafiles(df, range_partition_cols=["_olake_id"], num_groups=2))
+        t.commit_append(t.write_datafiles(df, ranged=True, num_groups=2))
     return t
 
 
@@ -62,12 +62,6 @@ class TestFFD:
 
 
 class TestCompaction:
-    def test_unknown_mode_rejected(self, spark, fragmented_table):
-        """A typo'd mode must raise, not silently select the copy path
-        (which would invalidate any copy-vs-spark A/B)."""
-        with pytest.raises(ValueError, match="compact mode"):
-            compact(fragmented_table, mode="Spark")
-
     def test_compact_reduces_files_preserves_content(self, spark, fragmented_table):
         t = fragmented_table
         before_files = len(t.entries())
@@ -260,14 +254,18 @@ class TestRelativeLocation:
 
 
 class TestCopyPathCompaction:
-    """The pyarrow row-group copy path (mode='auto') must be
-    indistinguishable from the Spark rewrite path (mode='spark') at the
-    scan and manifest level, fall back on mixed physical schemas, and
-    never run while equality-delete files are live."""
+    """The pyarrow row-group copy path must be indistinguishable from
+    the Spark rewrite path (``_rewrite_bins``, patched in for every
+    bin) at the scan and manifest level, fall back on mixed physical
+    schemas, and never run while equality-delete files are live."""
 
-    def test_copy_equals_spark_rewrite(self, spark, tmp_path):
+    def test_copy_equals_spark_rewrite(self, spark, tmp_path, monkeypatch):
+        from olake_spark.operators import compaction
+
         ts = []
         for mode in ("auto", "spark"):
+            if mode == "spark":
+                monkeypatch.setattr(compaction, "_copy_bins", compaction._rewrite_bins)
             loc = str(tmp_path / mode)
             t = Table.create(
                 spark, loc, "audio_clips", FULL_SCHEMA,
@@ -279,9 +277,9 @@ class TestCopyPathCompaction:
                     "clip_id", F.concat(F.lit(f"g{k}_"), F.col("clip_id"))
                 ).withColumn("_olake_id", F.md5("clip_id"))
                 t.commit_append(
-                    t.write_datafiles(df, range_partition_cols=["_olake_id"], num_groups=2)
+                    t.write_datafiles(df, ranged=True, num_groups=2)
                 )
-            compact(t, target_size=64 * 1024 * 1024, mode=mode)
+            compact(t, target_size=64 * 1024 * 1024)
             ts.append(t)
         auto, sp = ts
         assert _content_hash(auto.scan()) == _content_hash(sp.scan())
@@ -347,7 +345,7 @@ class TestCopyPathCompaction:
                 "clip_id", F.concat(F.lit(f"g{k}_"), F.col("clip_id"))
             ).withColumn("_olake_id", F.md5("clip_id"))
             t.commit_append(
-                t.write_datafiles(df, range_partition_cols=["_olake_id"], num_groups=2)
+                t.write_datafiles(df, ranged=True, num_groups=2)
             )
         merge_mor(t, cdc_batch(spark, 30, 1, updates=4, deletes=3))
         assert t.delete_entries()
@@ -384,7 +382,7 @@ def test_compact_ticker_bumps_per_wave(spark, tmp_path):
             .withColumn("clip_id", F.concat(F.lit(f"t{w}_"), F.col("clip_id")))
             .withColumn("_olake_id", F.md5(F.col("clip_id")))
         )
-        t.commit_append(t.write_datafiles(df, range_partition_cols=["_olake_id"], num_groups=2))
+        t.commit_append(t.write_datafiles(df, ranged=True, num_groups=2))
 
     class Spy:
         def __init__(self):
@@ -411,12 +409,12 @@ class TestRollback:
             identifier_fields=["_olake_id"],
         )
         df1 = generate_clips(spark, 20).withColumn("_olake_id", F.md5("clip_id"))
-        s1 = t.commit_append(t.write_datafiles(df1, range_partition_cols=["_olake_id"], num_groups=2))
+        s1 = t.commit_append(t.write_datafiles(df1, ranged=True, num_groups=2))
         h1 = _content_hash(t.scan())
         df2 = generate_clips(spark, 15).withColumn(
             "clip_id", F.concat(F.lit("b_"), F.col("clip_id"))
         ).withColumn("_olake_id", F.md5("clip_id"))
-        t.commit_append(t.write_datafiles(df2, range_partition_cols=["_olake_id"], num_groups=2))
+        t.commit_append(t.write_datafiles(df2, ranged=True, num_groups=2))
         assert t.scan().count() == 35
 
         rb = t.rollback_to(s1.snapshot_id)
@@ -435,16 +433,16 @@ class TestRollback:
             identifier_fields=["_olake_id"],
         )
         df1 = generate_clips(spark, 10).withColumn("_olake_id", F.md5("clip_id"))
-        s1 = t.commit_append(t.write_datafiles(df1, range_partition_cols=["_olake_id"], num_groups=1))
+        s1 = t.commit_append(t.write_datafiles(df1, ranged=True, num_groups=1))
         df2 = generate_clips(spark, 10).withColumn(
             "clip_id", F.concat(F.lit("bad_"), F.col("clip_id"))
         ).withColumn("_olake_id", F.md5("clip_id"))
-        t.commit_append(t.write_datafiles(df2, range_partition_cols=["_olake_id"], num_groups=1))
+        t.commit_append(t.write_datafiles(df2, ranged=True, num_groups=1))
         t.rollback_to(s1.snapshot_id)
         df3 = generate_clips(spark, 5).withColumn(
             "clip_id", F.concat(F.lit("fix_"), F.col("clip_id"))
         ).withColumn("_olake_id", F.md5("clip_id"))
-        t.commit_append(t.write_datafiles(df3, range_partition_cols=["_olake_id"], num_groups=1))
+        t.commit_append(t.write_datafiles(df3, ranged=True, num_groups=1))
         ids = [r["clip_id"] for r in t.scan().select("clip_id").collect()]
         assert len(ids) == 15
         assert not any(i.startswith("bad_") for i in ids)
@@ -466,12 +464,12 @@ class TestRollback:
             identifier_fields=["_olake_id"],
         )
         df1 = generate_clips(spark, 20).withColumn("_olake_id", F.md5("clip_id"))
-        s1 = t.commit_append(t.write_datafiles(df1, range_partition_cols=["_olake_id"], num_groups=1))
+        s1 = t.commit_append(t.write_datafiles(df1, ranged=True, num_groups=1))
         h1 = _content_hash(t.scan())
         df2 = generate_clips(spark, 10).withColumn(
             "clip_id", F.concat(F.lit("bad_"), F.col("clip_id"))
         ).withColumn("_olake_id", F.md5("clip_id"))
-        t.commit_append(t.write_datafiles(df2, range_partition_cols=["_olake_id"], num_groups=1))
+        t.commit_append(t.write_datafiles(df2, ranged=True, num_groups=1))
         t.rollback_to(s1.snapshot_id)
         res = expire_snapshots(t, keep_last=1)
         assert res["expired"] == 2  # both pre-rollback snapshots aged out

@@ -26,7 +26,7 @@ def merged_table(spark, tmp_table_dir):
     )
     base = generate_clips(spark, BASE_N, partitions=4)
     # initial load written range-partitioned on the key → tight bounds
-    t.commit_append(t.write_datafiles(base, range_partition_cols=["_olake_id"], num_groups=4))
+    t.commit_append(t.write_datafiles(base, ranged=True, num_groups=4))
     return t
 
 
@@ -182,7 +182,7 @@ class TestAnalyticRangeOutput:
         _olake_id [min,max] ranges are narrow and non-overlapping, so
         the NEXT merge's manifest pruning works (self-sustaining)."""
         batch = cdc_batch(spark, BASE_N, batch_no=7, updates=10)
-        merge_into(merged_table, batch, target_file_size=64 * 1024)
+        m = merge_into(merged_table, batch, target_file_size=64 * 1024)
         entries = sorted(
             (e for e in merged_table.entries() if e.lower_bounds.get("_olake_id")),
             key=lambda e: e.lower_bounds["_olake_id"],
@@ -190,10 +190,14 @@ class TestAnalyticRangeOutput:
         assert len(entries) >= 2
         for a, b in zip(entries, entries[1:]):
             assert a.upper_bounds["_olake_id"] <= b.lower_bounds["_olake_id"]
-        # each file spans well under the whole hex keyspace
+        # each file the merge wrote spans well under the whole hex
+        # keyspace (a base file holding no batch key is carried over
+        # as the initial load wrote it)
+        written = [e for e in entries if e.added_snapshot_id == m["snapshot_id"]]
+        assert len(written) == m["written_files"]
         spans = [
             int(e.upper_bounds["_olake_id"][:4], 16) - int(e.lower_bounds["_olake_id"][:4], 16)
-            for e in entries
+            for e in written
         ]
         assert max(spans) < 65536 / len(entries) * 3
 
@@ -210,7 +214,7 @@ class TestScanStableContract:
         )
         base = generate_clips(spark, BASE_N, partitions=4)
         t.commit_append(
-            t.write_datafiles(base, range_partition_cols=["_olake_id"], num_groups=4)
+            t.write_datafiles(base, ranged=True, num_groups=4)
         )
         return t
 

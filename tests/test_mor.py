@@ -15,7 +15,6 @@ contracts the judge graded missing in round 1:
 
 from __future__ import annotations
 
-import glob
 import os
 import re
 
@@ -40,7 +39,7 @@ def _mk_table(spark, path, n_groups=4):
     )
     base = generate_clips(spark, BASE_N, partitions=4)
     t.commit_append(
-        t.write_datafiles(base, range_partition_cols=["_olake_id"], num_groups=n_groups)
+        t.write_datafiles(base, ranged=True, num_groups=n_groups)
     )
     return t
 
@@ -72,21 +71,20 @@ def test_mor_matches_cow_over_batches(spark, tmp_path):
     assert len(cow.delete_entries()) == 0
 
 
-def test_merge_mor_rejects_composite_identifier(spark, tmp_path):
+def test_create_rejects_composite_identifier(spark, tmp_path):
     """A delete file holds one key column, so on a composite identifier
     the anti-join could never match and the old row would survive next
-    to the new one: refuse before writing anything."""
-    t = Table.create(
-        spark, str(tmp_path / "t"), "audio_clips", FULL_SCHEMA,
-        identifier_fields=["_olake_id", "clip_id"],
-    )
-    t.commit_append(t.write_datafiles(generate_clips(spark, BASE_N, partitions=2)))
-    n_snaps = len(t.meta.snapshots)
-    files = sorted(glob.glob(os.path.join(t.location, "data", "**"), recursive=True))
-    with pytest.raises(ValueError, match="single identifier field"):
-        merge_mor(t, cdc_batch(spark, BASE_N, 1, updates=2))
-    assert len(Table.load(spark, t.location).meta.snapshots) == n_snaps
-    assert sorted(glob.glob(os.path.join(t.location, "data", "**"), recursive=True)) == files
+    to the new one: a table has one key column, and ``Table.create``
+    refuses more before writing any metadata."""
+    loc = tmp_path / "t"
+    with pytest.raises(ValueError, match="one key column"):
+        Table.create(
+            spark, str(loc), "audio_clips", FULL_SCHEMA,
+            identifier_fields=["_olake_id", "clip_id"],
+        )
+    assert not loc.exists()
+    with pytest.raises(FileNotFoundError):
+        Table.load(spark, str(loc))
 
 
 def test_mor_writes_o_batch_bytes(spark, tmp_path):
@@ -240,12 +238,13 @@ def test_fold_deletes_path_mismatch_fails_loudly(spark, tmp_path, monkeypatch):
     assert _content_hash(t2) == before
 
 
-def test_table_at_a_path_spark_escapes(spark, tmp_path):
+def test_table_at_a_path_spark_escapes(spark, tmp_path, monkeypatch):
     """Spark reports ``_metadata.file_path`` URI-escaped (a space as
     %20, ``%`` as %25, ``#`` as %23, a no-break space as %C2%A0; ``+``
     and ``é`` kept): on a table located there, two MoR batches must
     still scan like CoW, changelog like a plain-path twin, fold and
     compact (Spark rewrite) without losing or resurrecting a row."""
+    from olake_spark.operators import compaction
     from olake_spark.operators.compaction import compact
 
     odd = _mk_table(spark, str(tmp_path / "a b%c#d+e" / "dé\u00a0jà"))
@@ -267,7 +266,33 @@ def test_table_at_a_path_spark_escapes(spark, tmp_path):
     assert changes(odd) == changes(twin)
     assert fold_deletes(odd)["delete_files"] == 2
     assert _content_hash(odd) == want
-    assert compact(odd, target_size=1 << 20, mode="spark")["files_in"] > 1
+    monkeypatch.setattr(compaction, "_copy_bins", compaction._rewrite_bins)
+    assert compact(odd, target_size=1 << 20)["files_in"] > 1
+    assert _content_hash(odd) == want
+
+
+def test_table_at_a_path_hadoop_globs(spark, tmp_path):
+    """Hadoop globs every path handed to ``spark.read``, and a table
+    location holding ``[1]`` or ``{a,b}`` is a pattern there: appends
+    must still commit their files, and two MoR batches must scan like
+    CoW, changelog, fold and compact without losing or resurrecting a
+    row."""
+    from olake_spark.operators.compaction import compact
+
+    odd = _mk_table(spark, str(tmp_path / "x[1]y{a,b}"))
+    cow = _mk_table(spark, str(tmp_path / "cow"))
+    assert len(odd.data_entries()) == len(cow.data_entries()) > 0
+    for i in (1, 2):
+        b = cdc_batch(spark, BASE_N, i, updates=6, deletes=3, inserts=2)
+        merge_mor(odd, b)
+        merge_into(cow, b)
+    want = _content_hash(cow)
+    assert _content_hash(odd) == want
+    assert odd.changelog().filter("_change_type = 'delete'").count() > 0
+    assert fold_deletes(odd)["delete_files"] == 2
+    assert not odd.delete_entries()
+    assert _content_hash(odd) == want
+    assert compact(odd, target_size=1 << 20)["files_in"] > 1
     assert _content_hash(odd) == want
 
 

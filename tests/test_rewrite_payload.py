@@ -39,7 +39,7 @@ def mixed_rate_table(spark, tmp_table_dir):
     for df, groups in ((pure, 1), (mixed, 3)):
         df = df.withColumn("_olake_id", F.md5("clip_id"))
         t.commit_append(
-            t.write_datafiles(df, range_partition_cols=["_olake_id"], num_groups=groups)
+            t.write_datafiles(df, ranged=True, num_groups=groups)
         )
     return t
 

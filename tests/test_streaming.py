@@ -489,7 +489,7 @@ class TestMongoChangeStreamLanding:
                 for i in range(5)
             ],
         )
-        r1 = cdc_stream_merge(t, landing, ckpt, key="id", fmt="mongo_jsonl", mode="mor")
+        r1 = cdc_stream_merge(t, landing, ckpt, fmt="mongo_jsonl", mode="mor")
         assert r1["rows"] == 5
         cur1 = read_mongo_cursor(r1["mongo_cursor"])
         assert cur1["op_time"] == [1767000001, 5]
@@ -506,7 +506,7 @@ class TestMongoChangeStreamLanding:
                 _mongo_evt("delete", 1767000009, 2, key={"id": "2"}),
             ],
         )
-        r2 = cdc_stream_merge(t, landing, ckpt, key="id", fmt="mongo_jsonl", mode="mor")
+        r2 = cdc_stream_merge(t, landing, ckpt, fmt="mongo_jsonl", mode="mor")
         cur2 = read_mongo_cursor(r2["mongo_cursor"])
         assert cur2["op_time"] == [1767000009, 2]
         got = {r["id"]: r for r in t.scan().collect()}
@@ -515,7 +515,7 @@ class TestMongoChangeStreamLanding:
 
         # restart with nothing new: no-op — same snapshot, same cursor
         snap_before = t.meta.current_snapshot_id
-        r3 = cdc_stream_merge(t, landing, ckpt, key="id", fmt="mongo_jsonl", mode="mor")
+        r3 = cdc_stream_merge(t, landing, ckpt, fmt="mongo_jsonl", mode="mor")
         assert r3["batches"] == 0 and r3["rows"] == 0
         t.refresh()
         assert t.meta.current_snapshot_id == snap_before
@@ -542,7 +542,7 @@ class TestMongoChangeStreamLanding:
 
         with _pytest.raises(Exception):
             cdc_stream_merge(
-                t, landing, ckpt, key="id", fmt="mongo_jsonl", mode="mor",
+                t, landing, ckpt, fmt="mongo_jsonl", mode="mor",
                 transform=boom,
             )
         cursor_path = os.path.join(ckpt, "mongo_cursor.json")
@@ -556,5 +556,5 @@ class TestMongoChangeStreamLanding:
         with _pytest.raises(ValueError, match="mongo_cursor_path"):
             cdc_stream_merge(
                 t, str(tmp_path / "landing"), str(tmp_path / "ckpt"),
-                key="id", fmt="parquet", mongo_cursor_path="/tmp/x.json",
+                fmt="parquet", mongo_cursor_path="/tmp/x.json",
             )

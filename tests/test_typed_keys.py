@@ -15,6 +15,8 @@ from __future__ import annotations
 
 import datetime as dt
 
+import pyarrow.compute as pc
+import pyarrow.parquet as papq
 import pytest
 from pyspark.sql import functions as F
 
@@ -53,7 +55,7 @@ def typed_table(request, spark, tmp_table_dir):
         f"typed_{typ}",
         SCHEMA_TMPL.format(typ=typ),
         identifier_fields=["id"],
-        properties={"stats.columns": "id", "merge.key-distribution": "none"},
+        properties={"stats.columns": "id"},
     )
     # One wide-bounds file: keys {1..20} ∪ {1500}. For bigint the string
     # bounds are lo="1", hi="1500": every key 2..20 compares OUTSIDE
@@ -79,7 +81,7 @@ class TestTypedBoundsPruning:
             "prune_bigint",
             SCHEMA_TMPL.format(typ="bigint"),
             identifier_fields=["id"],
-            properties={"stats.columns": "id", "merge.key-distribution": "none"},
+            properties={"stats.columns": "id"},
         )
         lo_file = spark.createDataFrame(_rows("bigint", range(1, 10), "r", 0, 0), t.schema)
         hi_file = spark.createDataFrame(_rows("bigint", range(1000, 1501, 100), "r", 0, 0), t.schema)
@@ -90,10 +92,25 @@ class TestTypedBoundsPruning:
         hit = affected_file_paths(t, keys, "id")
         assert hit == [e2[0].path]  # numeric containment, numeric pruning
 
+    def test_range_write_keeps_per_file_bounds_disjoint(self, spark, typed_table):
+        """A key-range write at a key other than the md5 ``_olake_id``
+        splits it with the sampled ``repartitionByRange``: each file
+        still covers its own key range."""
+        t, typ = typed_table
+        df = spark.createDataFrame(_rows(typ, range(1, 401), "r", 0, 0), t.schema)
+        entries = t.write_datafiles(df.repartition(4), ranged=True, num_groups=4)
+        assert sum(e.record_count for e in entries) == 400
+        assert len(entries) > 1
+        # read from the files: the manifest keeps no timestamp bounds
+        ids = [papq.read_table(t.abs_entry_path(e), columns=["id"])["id"] for e in entries]
+        spans = sorted((pc.min(c).as_py(), pc.max(c).as_py()) for c in ids)
+        for (lo, hi), (next_lo, _) in zip(spans, spans[1:]):
+            assert lo <= hi < next_lo
+
     def test_merge_into_no_duplicate_key(self, spark, typed_table):
         t, typ = typed_table
         batch = spark.createDataFrame(_rows(typ, [9], "u", 1, 10), t.schema)
-        merge_into(t, batch, key="id")
+        merge_into(t, batch)
         got = t.scan().filter(F.col("id") == F.lit(_key(typ, 9))).collect()
         assert len(got) == 1, f"duplicate key for {typ}"
         assert got[0]["val"] == "v1_9"
@@ -102,7 +119,7 @@ class TestTypedBoundsPruning:
     def test_fold_deletes_stays_dead(self, spark, typed_table):
         t, typ = typed_table
         batch = spark.createDataFrame(_rows(typ, [9, 15], "d", 1, 10), t.schema)
-        merge_mor(t, batch, key="id")
+        merge_mor(t, batch)
         assert t.scan().count() == 19
         fold_deletes(t)
         assert not t.delete_entries()
@@ -115,7 +132,7 @@ class TestTypedBoundsPruning:
             _rows(typ, [5, 9], "u", 2, 20) + _rows(typ, [1500], "d", 2, 20),
             t.schema,
         )
-        merge_mor(t, batch, key="id")
+        merge_mor(t, batch)
         got = {r["id"]: r["val"] for r in t.scan().collect()}
         assert len(got) == 20
         assert got[_key(typ, 5)] == "v2_5"
